@@ -222,7 +222,11 @@ final case class DatalogConf(
       * live in driver hash sets, rules fire as lowered local steps
       * from the frontier; overflow of the shared
       * `monotoniclocal.maxentries`/`autoentries` caps bails to the
-      * looped round-robin. */
+      * looped round-robin. Also covers linear SINGLE-predicate cliques
+      * whose iteration-0 seed slice localized (`localDeltaRows` /
+      * `localDeltaBytes`): the loop hands the driver-resident seed rows
+      * to the same kernel, and an ineligible shape, a type mismatch or
+      * an overflow continues the loop from iteration 0. */
     mutualLocal: String = "auto",
     /** `spark.datalog.recursion.monotonic.fragmentstate`
       * (auto|true|false, default auto): keep the mmin/mmax fixpoint

@@ -259,8 +259,17 @@ final class DatalogContext(val spark: SparkSession) {
   def monotonicLocalRuns: Int =
     evaluator.map(_.monotonicLocalRuns).getOrElse(0)
 
+  /** Driver-resident set fixpoints run so far: linear mutual cliques,
+    * and single-predicate linear cliques whose iteration-0 seed slice
+    * localized (spec hook). */
   def mutualLocalRuns: Int =
     evaluator.map(_.mutualLocalRuns).getOrElse(0)
+
+  /** Most rows one static-relation collect of the driver/task-local
+    * fixpoint paths brought to the driver (spec hook: over-cap statics
+    * are rejected before any row is gathered). */
+  def staticCollectPeakRows: Long =
+    evaluator.map(_.staticCollectPeakRows).getOrElse(0L)
 
   def monotonicFragmentRuns: Int =
     evaluator.map(_.monotonicFragmentRuns).getOrElse(0)

@@ -162,6 +162,11 @@ final class Evaluator(
       sb ++= ": mutuallocal=auto — linear mutual rules with seeds+statics " +
         "under the local caps run the whole round-robin DRIVER-RESIDENT " +
         "(zero jobs per iteration); otherwise the looped path below\n"
+    if (conf.mutualLocal != "false" && !clique.monotonic && preds.size == 1)
+      sb ++= ": mutuallocal=auto — when the iteration-0 seed slice " +
+        "localizes (localDeltaRows/localDeltaBytes), linear rules with " +
+        "statics under the local caps finish DRIVER-RESIDENT (zero jobs " +
+        "per iteration); otherwise the looped path below\n"
     if (conf.diffFlip != "false")
       sb ++= s": diffflip=${conf.diffFlip} — the per-iteration set " +
         "difference hash-builds candidate-sized sets (semi-join flip)" +
@@ -807,11 +812,20 @@ final class Evaluator(
     Some(seedW)
   }
 
+  /** Largest number of rows one static-relation collect of the local
+    * fixpoint paths brought to the driver (spec hook: an over-cap
+    * static must be rejected before any of its rows are gathered). */
+  var staticCollectPeakRows: Long = 0L
+
   /** Memoized capped static-relation collects for the local fixpoint
     * paths: the same (pred, within-atom equalities) is collected once
-    * even when several rules/atoms reference it. */
+    * even when several rules/atoms reference it. A static over the cap
+    * is rejected before any row is gathered: by its row count when the
+    * plan statistics know it (a loaded cache, a LocalRelation, a
+    * range), else by one count job. */
   private def staticRowsMemo(maxRows: Long)
       : (String, Seq[(Int, Int)]) => Option[IndexedSeq[IndexedSeq[Any]]] = {
+    val cap = maxRows.min(1L << 24).toInt
     val memo =
       mutable.Map[(String, Seq[(Int, Int)]), Option[IndexedSeq[IndexedSeq[Any]]]]()
     (pred, eqs) =>
@@ -824,11 +838,25 @@ final class Evaluator(
         val df = eqs.foldLeft(df0) { case (d, (a, b)) =>
           d.filter(d(d.columns(a)) === d(d.columns(b)))
         }
-        collectCapped(df, maxRows.min(1L << 24).toInt)
+        // the known count is of the unfiltered relation: exact for a
+        // plain static, an upper bound under within-atom equalities.
+        // Otherwise one narrow job counts the executed plan's rows (a
+        // Dataset count would add an aggregate stage, two jobs under
+        // AQE). Either way the collect below is known to fit the cap.
+        val overCap = Evaluator.knownRowCount(df0.queryExecution.optimizedPlan) match {
+          case Some(n) if n <= cap => false
+          case Some(_) if eqs.isEmpty => true
+          case _ => df.queryExecution.toRdd.count() > cap
+        }
+        if (overCap) None
+        else {
+          val rows = df.collect()
+          staticCollectPeakRows = staticCollectPeakRows.max(rows.length.toLong)
           // null-free contract: the lowered probes/filters use plain
           // equality and unboxed compares — a null row bails the path
-          .filter(_.forall(!_.anyNull))
-          .map(_.iterator.map(r => r.toSeq.toIndexedSeq).toIndexedSeq)
+          if (rows.exists(_.anyNull)) None
+          else Some(rows.iterator.map(r => r.toSeq.toIndexedSeq).toIndexedSeq)
+        }
       })
   }
 
@@ -1196,54 +1224,54 @@ final class Evaluator(
     Some(spark.createDataFrame(outRows.asJava, schema))
   }
 
-  /** Counts of driver-resident mutual fixpoints run (spec hook). */
+  /** Counts of driver-resident set fixpoints run — mutual cliques, and
+    * single-predicate cliques handed off after a localized seed slice
+    * (spec hook). */
   var mutualLocalRuns: Int = 0
 
-  /** Driver-resident whole fixpoint for MUTUAL semi-naive cliques
-    * (judge r15 #3) — the `monotoniclocal` treatment for the one
-    * fixpoint family that had no local path: the looped round-robin
-    * schedules one job per predicate per iteration even when the whole
-    * fact set is a few hundred rows (dl_evenodd: 8-row answer, 1.05s
-    * best / 6.9s worst observed — pure scheduling overhead, and the
-    * position jitter that kept poisoning bench adjudication).
+  /** Driver-resident whole fixpoint for semi-naive cliques (judge r15
+    * #3) — the `monotoniclocal` treatment for set-semantics recursion:
+    * the looped round-robin schedules one job per predicate per
+    * iteration even when the whole fact set is a few hundred rows
+    * (dl_evenodd: 8-row answer, 1.05s best / 6.9s worst observed —
+    * pure scheduling overhead). Two callers: a MUTUAL clique, seeded
+    * with its exit-rule unions before any loop work, and a
+    * SINGLE-predicate clique whose iteration-0 seed slice the loop
+    * already localized (its rows are on the driver; see runSemiNaive).
     *
     * Eligible when every recursive rule of every member is LINEAR (one
     * recursive atom of ANY clique member + static probes, `=`
     * assignments, comparison filters — `lowerLinearBody`), all schemas
     * are value-comparable with exact type agreement, and the seeds +
-    * statics fit the local caps. Fact sets live in driver hash sets;
-    * rules fire from the frontier indexed by their recursive atom's
-    * predicate; rounds are Jacobi — set semantics is inflationary and
-    * schedule-independent, so this reaches the looped round-robin's
-    * exact fixpoint. Total scheduled jobs: one narrow collect per
-    * exit-rule union plus one memoized collect per static relation —
-    * ZERO per iteration. `exitFilter` (bound queries) applies to the
-    * seeds exactly as in the looped path. Overflow of the shared
-    * monotoniclocal entry caps, or a static past 1M rows, bails to the
-    * looped paths (work is redone there; driver memory stays bounded).
+    * statics fit the local caps. The shape is screened first with no
+    * static rows at all, so an unlowerable clique bails job-free.
+    * Fact sets live in driver hash sets; rules fire from the frontier
+    * indexed by their recursive atom's predicate; rounds are Jacobi —
+    * set semantics is inflationary and schedule-independent, so this
+    * reaches the looped round-robin's exact fixpoint. Total scheduled
+    * jobs: one narrow collect per seed (none for a LocalRelation seed)
+    * plus one memoized collect per static relation — ZERO per
+    * iteration. `seedsDf` already carries any bound-query filter.
+    * Overflow of the shared monotoniclocal entry caps, or a static
+    * past 1M rows, bails to the looped paths (work is redone there;
+    * driver memory stays bounded).
     *
     * Reference semantics: MutualRecursion.scala:28-131 (round-robin
     * to simultaneous fixpoint of all clique members). */
   private def driverMutualFixpoint(
       clique: Analysis#Clique,
-      exitFilter: Map[String, DataFrame => DataFrame])
+      seedsDf: Map[String, DataFrame])
       : Option[Map[String, DataFrame]] = {
     import Evaluator._
     val spark = org.apache.spark.sql.SparkSession.active
     val preds = clique.preds.toSeq.sorted
-
-    // ---- schema prototypes: exit rules compile directly; preds whose
-    // first facts arrive only through recursive rules resolve by
-    // placeholder propagation (the explainRecursion pattern)
-    val schemas = mutable.Map[String, org.apache.spark.sql.types.StructType]()
-    val seedsDf = mutable.Map[String, DataFrame]()
-    for (q <- preds; exits = clique.exitRules(q) if exits.nonEmpty) {
-      val u = exits.map(r => compileRule(r, baseResolver)).reduce(_ union _)
-      val seeded = exitFilter.get(q).map(f => f(u)).getOrElse(u)
-      seedsDf(q) = seeded
-      schemas(q) = seeded.schema
-    }
     if (seedsDf.isEmpty) return None // empty fixpoint — looped path's job
+
+    // ---- schema prototypes: seeded preds take their seed's schema;
+    // preds whose first facts arrive only through recursive rules
+    // resolve by placeholder propagation (the explainRecursion pattern)
+    val schemas = mutable.Map[String, org.apache.spark.sql.types.StructType]()
+    seedsDf.foreach { case (q, df) => schemas(q) = df.schema }
     var progress = true
     while (progress && schemas.size < preds.size) {
       progress = false
@@ -1267,27 +1295,32 @@ final class Evaluator(
 
     // ---- lower every member's recursive rules (statics ≤ 1M rows,
     // the driverMonotonicFixpoint cap)
-    val staticRows = staticRowsMemo(1L << 20)
-    val lowered = mutable.ArrayBuffer[MutualRule]()
-    for (p <- preds; r <- clique.recursiveRules(p)) {
-      val recs = r.body.collect {
-        case a: BodyAtom if clique.preds(a.pred) => a }
-      if (recs.length != 1) return None // non-linear mutual: looped path
-      val q = recs.head.pred
-      val (steps, slot, envType, _) =
-        lowerLinearBody(clique, r, schemas(q), staticRows)
-          .getOrElse(return None)
-      val head = r.head.args.map {
-        case PlainArg(TermExpr(Variable(n))) =>
-          slot.getOrElse(n, return None)
-        case _ => return None
-      }.toIndexedSeq
-      if (head.length != schemas(p).length) return None
-      if (!head.indices.forall(i =>
-          envType(head(i)) == schemas(p)(i).dataType)) return None
-      lowered += MutualRule(p, q, schemas(q).length, envType.length,
-        steps, head)
+    def lowerAll(staticRows: (String, Seq[(Int, Int)]) =>
+        Option[IndexedSeq[IndexedSeq[Any]]]): Option[Seq[MutualRule]] = {
+      val lowered = mutable.ArrayBuffer[MutualRule]()
+      for (p <- preds; r <- clique.recursiveRules(p)) {
+        val recs = r.body.collect {
+          case a: BodyAtom if clique.preds(a.pred) => a }
+        if (recs.length != 1) return None // non-linear: looped path
+        val q = recs.head.pred
+        val (steps, slot, envType, _) =
+          lowerLinearBody(clique, r, schemas(q), staticRows)
+            .getOrElse(return None)
+        val head = r.head.args.map {
+          case PlainArg(TermExpr(Variable(n))) =>
+            slot.getOrElse(n, return None)
+          case _ => return None
+        }.toIndexedSeq
+        if (head.length != schemas(p).length) return None
+        if (!head.indices.forall(i =>
+            envType(head(i)) == schemas(p)(i).dataType)) return None
+        lowered += MutualRule(p, q, schemas(q).length, envType.length,
+          steps, head)
+      }
+      Some(lowered.toSeq)
     }
+    // shape screen against empty statics: no job before the shape is known
+    if (lowerAll((_, _) => Some(IndexedSeq.empty)).isEmpty) return None
 
     // ---- seeds under the shared entry caps (economic ceiling below
     // the memory one, as monotoniclocal: the single-thread driver loop
@@ -1302,6 +1335,7 @@ final class Evaluator(
       if (rows.exists(_.anyNull)) return None
       seedRows(q) = rows
     }
+    val lowered = lowerAll(staticRowsMemo(1L << 20)).getOrElse(return None)
 
     mutualLocalRuns += 1
     val facts = preds.map(q =>
@@ -1853,7 +1887,12 @@ final class Evaluator(
     // the local caps; any ineligibility falls through to the looped
     // round-robin below.
     if (conf.mutualLocal != "false" && !clique.monotonic && preds.size > 1) {
-      driverMutualFixpoint(clique, exitFilter) match {
+      val seeds = for (q <- preds; exits = clique.exitRules(q) if exits.nonEmpty)
+        yield {
+          val u = exits.map(r => compileRule(r, baseResolver)).reduce(_ union _)
+          q -> exitFilter.get(q).map(f => f(u)).getOrElse(u)
+        }
+      driverMutualFixpoint(clique, seeds.toMap) match {
         case Some(m) => return m
         case None => ()
       }
@@ -1925,6 +1964,23 @@ final class Evaluator(
             chains += p -> Vector(s); delta += p -> s
           }
         }
+      }
+    }
+
+    // Single-predicate handoff to the driver-resident kernel: when the
+    // loop's own cap rule (`localizable`) already made the seed slice a
+    // LocalRelation, its rows are on the driver, and a linear clique
+    // finishes there with zero jobs per round instead of one planned
+    // anti-join chain per round. Only slice flags already in memory are
+    // read here, so a seed that stayed on the cluster pays nothing; an
+    // unlowerable shape, a type mismatch or a cap overflow returns None
+    // and the loop continues from this iteration-0 state. logplans asks
+    // for the looped plans, so it keeps the loop.
+    if (conf.mutualLocal != "false" && !clique.monotonic && preds.size == 1 &&
+        !conf.logPlans && delta.get(preds.head).exists(_.isLocal)) {
+      driverMutualFixpoint(clique, Map(preds.head -> delta(preds.head).df)) match {
+        case Some(m) => return m
+        case None => ()
       }
     }
 
@@ -2124,6 +2180,32 @@ final class Evaluator(
             if (n > 0) {
               newDelta += p -> s
               var next = chain :+ s
+              // fold the disjoint local slices into ONE LocalRelation, so
+              // the diff keeps one broadcast anti-join however many
+              // rounds stayed local (the count-based compaction below
+              // sees only cluster slices); a fold past the local caps
+              // becomes one cluster slice instead. Scanning a
+              // LocalRelation runs no job.
+              val locals = next.filter(_.isLocal)
+              if (locals.length > 1) {
+                import scala.jdk.CollectionConverters._
+                val schema = org.apache.spark.sql.types.StructType(
+                  locals.head.df.schema.fields.zipWithIndex.map { case (f, i) =>
+                    f.copy(nullable = locals.exists(_.df.schema(i).nullable)) })
+                val rows = locals.flatMap(_.df.collect())
+                val folded = spark.createDataFrame(rows.asJava, schema)
+                val foldedRows = rows.length.toLong
+                val foldedSlice =
+                  if (localizable(foldedRows, folded))
+                    Slice(folded, isLocal = true, rows = foldedRows)
+                  else sliceOf(folded.repartition(nParts, pv.map(folded.col): _*),
+                    pv, p, iter, addToBloom = false)._1
+                // in the first local slice's place: the chain head names
+                // the result's columns
+                val at = next.indexWhere(_.isLocal)
+                val rest = next.filterNot(_.isLocal)
+                next = rest.take(at) ++ (foldedSlice +: rest.drop(at))
+              }
               // compact so the anti-join chain stays short: slices are
               // disjoint by construction, so a claimed narrow union
               // collapses them for free (no job, no dedup, layout
@@ -4166,6 +4248,26 @@ object Evaluator extends Serializable {
       case _: org.apache.spark.sql.catalyst.plans.logical.OneRowRelation => true
       case _: org.apache.spark.sql.execution.LogicalRDD => true
       case _ => false
+    }
+
+  /** Exact row count of an optimized plan known without running a
+    * job: projections keep the count of the leaf below them, which
+    * knows it when it is a LocalRelation, a range, or a fully loaded
+    * cache (whose build counted its rows). None for any other shape —
+    * catalog statistics are not trusted, they can be stale. */
+  private[datalog] def knownRowCount(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Option[BigInt] =
+    plan match {
+      case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
+        knownRowCount(p.child)
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        Some(BigInt(l.data.length))
+      case r: org.apache.spark.sql.catalyst.plans.logical.Range =>
+        Some(r.numElements)
+      case m: org.apache.spark.sql.execution.columnar.InMemoryRelation
+          if m.cacheBuilder.isCachedColumnBuffersLoaded =>
+        m.stats.rowCount
+      case _ => None
     }
 
   /** Marker message for a null seed row detected inside a

@@ -1,7 +1,5 @@
 package graft.datalog
 
-import scala.io.Source
-
 /** Golden answers mirrored from the reference's
   * AggregatesInRecursionQuerySuite (monotonic mmin/mmax inside recursion)
   * and AggregatesOverRecursionQuerySuite (stratified min above a
@@ -80,11 +78,13 @@ class AggInRecursionDatalogSpec extends DatalogSuite {
   }
 
   test("connected components via mmin (tree11: 1320 components)") {
-    // 71,390-edge tree fixture from the reference's test resources
-    // (read-only data, not code); known answer 1320
-    // (AggregatesInRecursionQuerySuite.scala:94).
-    val edges = Source.fromFile(
-      "/root/reference/datalog/src/test/resources/tree11.csv").getLines().toSeq
+    // a seeded forest of the reference's tree11 size: 71,390 edge rows
+    // (35,695 undirected tree edges, both directions) in exactly 1320
+    // trees by construction (AggregatesInRecursionQuerySuite.scala:94)
+    val forest = GeneratedGraphs.forest(nodes = 37015, trees = 1320, seed = 11L)
+    assert(forest.size == 71390)
+    assert(GeneratedGraphs.components(forest) == 1320)
+    val edges = forest.map { case (a, b) => s"$a,$b" }
     val db = "database({arc(X:integer, Y:integer)})."
     val program = "cc3(X,mmin<X>) <- arc(X,_)." +
       "cc3(Y,mmin<V>) <- cc3(X,V), arc(X,Y)." +

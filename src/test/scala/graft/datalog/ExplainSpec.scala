@@ -24,6 +24,33 @@ class ExplainSpec extends DatalogSuite {
     ctx.close()
   }
 
+  test("explainRecursion reports the single-predicate driver handoff") {
+    val ctx = new DatalogContext(spark)
+    ctx.loadProgram(
+      "database({arc(X:integer, Y:integer)}). " +
+        "tc(A,B) <- arc(A,B). tc(A,B) <- tc(A,C), arc(C,B).")
+    ctx.registerData("arc", Fixtures.graph1b)
+    val s = ctx.explainRecursion("tc")
+    assert(s.contains("mutuallocal=auto") && s.contains("iteration-0 seed slice"), s)
+    assert(!s.contains("mutual round-robin"), s)
+    val key = "spark.datalog.recursion.mutuallocal"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val off = new DatalogContext(spark)
+      off.loadProgram(
+        "database({arc(X:integer, Y:integer)}). " +
+          "tc(A,B) <- arc(A,B). tc(A,B) <- tc(A,C), arc(C,B).")
+      off.registerData("arc", Fixtures.graph1b)
+      assert(!off.explainRecursion("tc").contains("mutuallocal"))
+      off.close()
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    ctx.close()
+  }
+
   test("explainRecursion marks mutual cliques and magic-style no-exit preds") {
     val ctx = new DatalogContext(spark)
     ctx.loadProgram(

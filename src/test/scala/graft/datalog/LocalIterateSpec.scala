@@ -521,4 +521,119 @@ class LocalIterateSpec extends AnyFunSuite {
     assert(runs == 0, "non-linear mutual must not take the driver path")
     assert(rows.map(_.head.toInt) == (0 to 6 by 2).toSet)
   }
+
+  // ---- single-predicate handoff to the driver-resident kernel ----
+
+  /** `chains` disjoint paths of `length` nodes: node c*1000+i → c*1000+i+1. */
+  private def chainArcs(chains: Int, length: Int): Seq[String] =
+    for (c <- 0 until chains; i <- 0 until length - 1)
+      yield s"${c * 1000 + i},${c * 1000 + i + 1}"
+
+  private def runChainTc(q: String, arcRows: Seq[String], confs: (String, String)*)
+      : (Set[Seq[String]], Int, Int) = withConf(confs: _*) {
+    val ctx = new DatalogContext(spark)
+    ctx.loadProgram(db + llTc)
+    ctx.registerData("arc", arcRows)
+    val (rows, jobs) = countJobs(ctx.queryStrings(q).toSet)
+    (rows.map(parseRow), jobs, ctx.mutualLocalRuns)
+  }
+
+  test("handoff: a 100-chain x 14 forest evaluates in a bounded number of jobs") {
+    val arcRows = chainArcs(100, 14)
+    val expected = (for (c <- 0 until 100; i <- 0 until 14; j <- i + 1 until 14)
+      yield Seq(s"${c * 1000 + i}", s"${c * 1000 + j}")).toSet
+    val (looped, loopedJobs, loopedRuns) = runChainTc("tc(A,B).", arcRows,
+      "spark.datalog.recursion.mutuallocal" -> "false")
+    assert(loopedRuns == 0 && looped == expected)
+    val (local, jobs, runs) = runChainTc("tc(A,B).", arcRows)
+    assert(runs == 1, "the localized seed slice was not handed off")
+    assert(local == expected)
+    // seed checkpoint + collect, one static count + collect: none per round
+    assert(jobs <= 8, s"expected O(1) jobs for the handoff, saw $jobs")
+    assert(loopedJobs > 3 * jobs, s"looped $loopedJobs vs handoff $jobs")
+  }
+
+  test("handoff: an entry-cap overflow mid-loop falls back to the full answer") {
+    val arcRows = chainArcs(1, 5)
+    val (looped, _, _) = runChainTc("tc(A,B).", arcRows,
+      "spark.datalog.recursion.mutuallocal" -> "false")
+    val (rows, _, runs) = runChainTc("tc(A,B).", arcRows,
+      // the 4 seed arcs fit a cap of 4, the 10 facts do not: the kernel
+      // engages, overflows in round 1 and the loop resumes from
+      // iteration 0
+      "spark.datalog.recursion.monotoniclocal.autoentries" -> "4")
+    assert(looped.size == 10 && rows == looped)
+    assert(runs == 1, "the kernel should engage before the overflow")
+  }
+
+  test("handoff: an Int seed over a Long static falls back to the loop") {
+    val ctx = new DatalogContext(spark)
+    ctx.loadProgram("database({larc(X:long, Y:long)})." +
+      "lreach(X) <- X=0. lreach(Y) <- lreach(X), larc(X,Y).")
+    ctx.registerData("larc", (0 until 12).map(i => s"$i,${i + 1}"))
+    val got = ctx.query("lreach(A).").collect()
+      .map(_.get(0).asInstanceOf[Number].longValue).toSet
+    assert(got == (0L to 12L).toSet)
+    assert(ctx.mutualLocalRuns == 0, "an Int-vs-Long probe must not lower")
+  }
+
+  test("static over the driver cap is rejected before any row is gathered") {
+    val cap = 1 << 20
+    import org.apache.spark.sql.functions.col
+    def run(big: org.apache.spark.sql.DataFrame, local: String) =
+      withConf("spark.datalog.recursion.mutuallocal" -> local) {
+        val ctx = new DatalogContext(spark)
+        ctx.loadProgram("database({sarc(X:long, Y:long), big(X:long, Y:long)})." +
+          "r(X,Y) <- sarc(X,Y). r(X,Y) <- r(X,Z), big(Z,Y).")
+        ctx.registerData("sarc", Seq("1,2", "2,3"))
+        ctx.registerTable("big", big)
+        val rows = ctx.queryStrings("r(A,B).").toSet
+        (rows, ctx.staticCollectPeakRows, ctx.mutualLocalRuns)
+      }
+    val expected = Set("[1,2]", "[2,3]", "[1,5000002]", "[2,5000003]")
+    val n = cap + 16L
+    // a range's row count is in its plan; a filtered one needs one count
+    for (ids <- Seq(spark.range(0, n), spark.range(0, n).filter(col("id") >= 0))) {
+      val big = ids.select(col("id").as("x"), (col("id") + 5000000L).as("y"))
+      val (looped, _, _) = run(big, "false")
+      val (rows, peak, runs) = run(big, "auto")
+      assert(looped == expected && rows == looped)
+      assert(runs == 0, "an over-cap static must bail the kernel")
+      assert(peak <= cap, s"the driver received $peak static rows (cap $cap)")
+    }
+  }
+
+  test("local slices fold into one LocalRelation when the kernel cannot lower") {
+    // a negated static atom is not lowerable, so the looped copart path
+    // runs all 29 rounds with local deltas
+    val chains = 10
+    val len = 30
+    val arcRows = chainArcs(chains, len)
+    val blocked = (0 until chains).map(c => c * 1000 + 7 + c)
+    val ctx = new DatalogContext(spark)
+    ctx.loadProgram("database({arc(X:integer, Y:integer), blocked(X:integer)})." +
+      "ntc(A,B) <- arc(A,B). ntc(A,B) <- ntc(A,C), arc(C,B), ~blocked(B).")
+    ctx.registerData("arc", arcRows)
+    ctx.registerData("blocked", blocked.map(_.toString))
+    val df = ctx.query("ntc(A,B).")
+    val got = df.collect().map(r => (r.getInt(0), r.getInt(1))).toSet
+    // oracle: naive closure over Scala sets
+    val arcs = arcRows.map { r => val p = r.split(","); (p(0).toInt, p(1).toInt) }
+    val succ = arcs.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+    var oracle = arcs.toSet
+    var grew = true
+    while (grew) {
+      val next = oracle ++ (for ((a, c) <- oracle; b <- succ.getOrElse(c, Nil)
+        if !blocked.contains(b)) yield (a, b))
+      grew = next.size > oracle.size
+      oracle = next
+    }
+    assert(got == oracle && oracle.size > 1000)
+    assert(ctx.mutualLocalRuns == 0)
+    val leaves = df.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.count(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation]) == 1,
+      s"expected one folded LocalRelation leaf, got:\n${df.queryExecution.optimizedPlan}")
+    ctx.close()
+  }
 }

@@ -87,6 +87,37 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("left-linear TC handoff (full and bound) agrees with Warshall, both paths") {
+    // the localized seed slice hands the fixpoint to the driver-resident
+    // kernel under mutuallocal=auto; false keeps the looped path
+    forAllGraphs(4343L) { edges =>
+      val src = edges.head._1
+      for (local <- Seq("auto", "false")) {
+        val prev = spark.conf.getOption("spark.datalog.recursion.mutuallocal")
+        spark.conf.set("spark.datalog.recursion.mutuallocal", local)
+        try {
+          val ctx = new DatalogContext(spark)
+          ctx.loadProgram(
+            "database({arc(X:integer, Y:integer)})." +
+              "tc(A,B) <- arc(A,B). tc(A,B) <- tc(A,C), arc(C,B).")
+          ctx.registerData("arc", edges.map { case (a, b) => s"$a,$b" })
+          val bound = ctx.query(s"tc($src,B).").collect()
+            .map(r => (r.getInt(0), r.getInt(1))).toSet
+          assert(ctx.lastBoundPushdown)
+          assert(bound == warshall(edges).filter(_._1 == src), s"bound, $local")
+          val full = ctx.query("tc(A,B).").collect()
+            .map(r => (r.getInt(0), r.getInt(1))).toSet
+          assert(full == warshall(edges), s"full, $local")
+          assert(ctx.mutualLocalRuns == (if (local == "auto") 2 else 0),
+            s"mutuallocal=$local ran ${ctx.mutualLocalRuns} driver fixpoints")
+        } finally prev match {
+          case Some(v) => spark.conf.set("spark.datalog.recursion.mutuallocal", v)
+          case None => spark.conf.unset("spark.datalog.recursion.mutuallocal")
+        }
+      }
+    }
+  }
+
   test("SCC + condensation agree with mutual-reachability oracle on random cyclic digraphs") {
     // scc_id(v) = min over {v} ∪ {u : v ⇄ u}; condensation = quotient
     // edges between distinct components — derived here directly from
