@@ -354,13 +354,12 @@ object Bench {
         try Tables.load(spark, sfDir, n).count() catch { case _: Throwable => () })
     }
     // Fixpoint-machinery warmup (untimed): the datalog evaluator's
-    // claimed checkpoints, shuffled-hash semi/anti joins, bloom-probe
-    // expression, within-task local-iterate kernels, and the monotonic
-    // merge each carry their own codegen + JIT surcharge. The first
-    // fixpoint of a kind in the run pays it (~2-4s at sf0.1), and the
-    // hash-Map query order decides WHICH gate that is: r10's
-    // dl_tc_bloom at position 8 billed 4.9s vs its diffflip twin's
-    // 2.7s at position 48 for identical steady-state plans, and
+    // claimed checkpoints, shuffled-hash semi/anti joins, within-task
+    // local-iterate kernels, and the monotonic merge each carry their
+    // own codegen + JIT surcharge. The first fixpoint of a kind in the
+    // run pays it (~2-4s at sf0.1), and the hash-Map query order
+    // decides WHICH gate that is: r10's dl_tc_bloom at position 8
+    // billed 4.9s vs its diffflip twin's 2.7s at position 48, and
     // dl_apsp_localiter at position 5 ran slower than the looped
     // dl_apsp at 39 despite winning every warm A/B. One tiny
     // forced-conf program per machinery family absorbs the surcharge
@@ -370,7 +369,6 @@ object Bench {
       val keys = Seq(
         "spark.datalog.recursion.copartition.enabled" -> "true",
         "spark.datalog.recursion.diffflip" -> "true",
-        "spark.datalog.recursion.bloomprefilter" -> "true",
         // force the checkpoint/claim path (tiny deltas would localize)
         "spark.datalog.recursion.localDeltaRows" -> "0")
       val prev = (keys.map(_._1) ++ Seq(
@@ -399,7 +397,7 @@ object Bench {
             c.query(q).count()
           } finally c.close()
         }
-        run(tcProg, "wtc(A,B).") // copart + diffflip + bloom loop
+        run(tcProg, "wtc(A,B).") // copart + diffflip loop
         spark.conf.set("spark.datalog.recursion.localiterate", "true")
         run(tcProg, "wtc(A,B).") // within-task linear kernel
         run(mProg, "wapsp(A,B,C).") // within-task monotonic kernel
@@ -467,7 +465,7 @@ object Bench {
         graft.queries.PackResources.releaseAll()
       }
       // fixpoint twins one decade below bench scale: big enough that the
-      // gate's own checkpoint/claim/bloom/localiterate hot loops reach
+      // gate's own checkpoint/claim/localiterate hot loops reach
       // C2 thresholds on the real code paths
       dirOr("SPARK_GRAFT_WARM_DL_DIR", "/root/testdata/sf0.01", "fixpoint").foreach { dlDir =>
         Seq("dl_tc", "dl_tc_nl", "dl_tc_diffflip", "dl_tc_bloom",

@@ -99,37 +99,6 @@ final case class DatalogConf(
       * every iteration outweighs evaluating the candidate subtree
       * twice. */
     diffFlipMinRows: Long = 1L << 20,
-    /** `spark.datalog.recursion.bloomprefilter` (auto|true|false,
-      * default false): keep a driver-merged exact-hash set per
-      * recursive predicate over its accumulated facts — populated by
-      * an accumulator riding the per-iteration checkpoint job, each
-      * task update delta-sized (zero extra jobs; see
-      * `FactHashAccumulator`) — and, when the diffflip semi-join
-      * engages, hash-build only the sketch-POSITIVE candidates: a
-      * negative candidate is certainly new (no false negatives), so it
-      * skips the set-difference build entirely. The membership half of
-      * the reference's executor-resident hash sets
-      * (SetRDD.scala:29-167): per-iteration hashing drops from
-      * O(|candidates|) to O(|maybe-seen candidates|) on top of the
-      * flip's O(|all|)→O(|candidates|). Degrades gracefully — a
-      * saturated sketch routes everything through the join it would
-      * have taken anyway. `auto` probes only past `minrows`
-      * accumulated facts (below that the semi build is already cheap
-      * and the probe is pure overhead); `true` probes from the first
-      * iteration. */
-    bloomPrefilter: String = "false",
-    /** `spark.datalog.recursion.bloomprefilter.minrows` (default
-      * 1 << 18): accumulated-fact threshold past which `auto` engages
-      * the probe. */
-    bloomMinRows: Long = 1L << 18,
-    /** `spark.datalog.recursion.bloomprefilter.expecteditems` (default
-      * 1 << 20): MAX sketch capacity — the sketch is sized from the
-      * observed fact count (2× headroom) and doubles up to this cap,
-      * past which driver memory stays bounded and the false-positive
-      * rate climbs toward a no-op filter, never a wrong answer. */
-    bloomExpectedItems: Long = 1L << 20,
-    /** `spark.datalog.recursion.bloomprefilter.fpp` (default 0.03). */
-    bloomFpp: Double = 0.03,
     /** `spark.datalog.recursion.localiterate` (default false): for
       * DECOMPOSABLE programs — single-predicate cliques whose every
       * recursive rule is a linear two-atom join (recursive ⨝ static,
@@ -324,9 +293,9 @@ final case class DatalogConf(
       * cachebuildside economics on the broadcast side). Engages only
       * when the steady-state shape is provably stable: single-pred
       * zero-exchange loop, claimed non-local delta and chain, stable
-      * schema, no active bloom probe (its sketch literal changes every
-      * round), no logplans; anything else falls back to the compiled
-      * path for that iteration. `false` restores r19 behavior. */
+      * schema, same diffflip arm, no logplans; anything else falls back
+      * to the compiled path for that iteration. `false` restores r19
+      * behavior. */
     planTemplate: Boolean = true,
     /** `spark.datalog.recursion.support.fragmentstate`
       * (auto|true|false, default auto): append-only fragment state for
@@ -370,7 +339,9 @@ object DatalogConf {
     *    always on here (Tungsten partial aggregation), accepted no-op.
     *  - `spark.datalog.monotonicaggregate.usepartial` (ref
     *    MonotonicAggregatePartial.scala): partial aggregation before
-    *    the shuffle — always on here, accepted no-op. */
+    *    the shuffle — always on here, accepted no-op.
+    *
+    * Retired native keys get the same one-line note: `retiredKeys`. */
   def referenceMappings(spark: SparkSession): Seq[String] = {
     val notes = Seq.newBuilder[String]
     spark.conf.getOption("spark.datalog.recursion.version").foreach { v =>
@@ -411,8 +382,19 @@ object DatalogConf {
         "static join sides are persisted on first use across iterations " +
         "(spark.datalog.storage.level controls the level)"
     }
+    for (k <- retiredKeys; v <- spark.conf.getOption(k))
+      notes += s"$k=$v ignored: retired (the membership pre-filter on the " +
+        "diffflip set difference measured at parity with the flip alone)"
     notes.result()
   }
+
+  /** Native keys of removed engine arms: accepted, warned about once,
+    * and without effect. */
+  private val retiredKeys: Seq[String] = Seq(
+    "spark.datalog.recursion.bloomprefilter",
+    "spark.datalog.recursion.bloomprefilter.minrows",
+    "spark.datalog.recursion.bloomprefilter.expecteditems",
+    "spark.datalog.recursion.bloomprefilter.fpp")
 
   private val warned = scala.collection.concurrent.TrieMap[String, Unit]()
   private def warnOnce(msg: String): Unit =
@@ -466,26 +448,6 @@ object DatalogConf {
     diffFlipMinRows =
       spark.conf.get("spark.datalog.recursion.diffflip.minrows",
         (1L << 20).toString).toLong,
-    bloomPrefilter = {
-      val v = spark.conf.get("spark.datalog.recursion.bloomprefilter", "false")
-        .trim.toLowerCase
-      require(Set("auto", "true", "false")(v),
-        s"spark.datalog.recursion.bloomprefilter must be auto|true|false, got '$v'")
-      v
-    },
-    bloomMinRows =
-      spark.conf.get("spark.datalog.recursion.bloomprefilter.minrows",
-        (1L << 18).toString).toLong,
-    bloomExpectedItems =
-      spark.conf.get("spark.datalog.recursion.bloomprefilter.expecteditems",
-        (1L << 20).toString).toLong,
-    bloomFpp = {
-      val v = spark.conf
-        .get("spark.datalog.recursion.bloomprefilter.fpp", "0.03").toDouble
-      require(v > 0 && v < 1,
-        s"spark.datalog.recursion.bloomprefilter.fpp must be in (0,1), got $v")
-      v
-    },
     localIterate =
       // native key wins; the reference's boolean key maps through
       spark.conf.getOption("spark.datalog.recursion.localiterate")

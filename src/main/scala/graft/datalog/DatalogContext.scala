@@ -278,10 +278,6 @@ final class DatalogContext(val spark: SparkSession) {
   def lastClaimedStatics: Set[String] =
     evaluator.map(_.lastClaimedStatics).getOrElse(Set.empty)
 
-  /** Diffflip semi builds the bloom pre-filter narrowed (spec hook). */
-  def bloomPrefilterSplits: Int =
-    evaluator.map(_.bloomPrefilterSplits).getOrElse(0)
-
   /** Fixpoint iterations served by plan-template leaf-swap reuse (r20
     * spec/profiler hook). */
   def planTemplateHits: Int =

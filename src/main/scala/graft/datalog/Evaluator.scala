@@ -311,15 +311,28 @@ final class Evaluator(
     trackedRDDs.clear()
     memo.clear()
     boundMemo.clear()
+    staticRowsCache.clear()
+  }
+
+  /** Session confs pinned for the span of one fixpoint loop: `pin`
+    * sets a key and remembers its prior value, `restore` puts every
+    * pinned key back, last pin first. */
+  private final class ConfPins {
+    private val spark = org.apache.spark.sql.SparkSession.active
+    private val prior = mutable.Buffer[(String, Option[String])]()
+    def pin(k: String, v: String): Unit = {
+      prior += k -> spark.conf.getOption(k)
+      spark.conf.set(k, v)
+    }
+    def restore(): Unit = prior.reverseIterator.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Count of deltas localized into LocalRelations (spec hook for the
     * row/byte caps). */
   var localizedSlices: Int = 0
-
-  /** Count of diffflip semi builds the bloom pre-filter narrowed to the
-    * bloom-positive candidate subset (spec hook). */
-  var bloomPrefilterSplits: Int = 0
 
   /** Count of fixpoint iterations served by plan-template reuse —
     * executed-plan leaf swap instead of a Catalyst re-plan (spec hook). */
@@ -543,11 +556,11 @@ final class Evaluator(
         * enough that hash-building them dominates the iteration */
       rows: Long = 0L) {
     // Every slice must be a materialized plan (checkpoint RDD /
-    // LocalRelation leaves only): the fixpoint's finally block destroys
-    // all bloom-probe broadcasts on exit, which is sound ONLY because
-    // no returned plan can re-evaluate iteration lineage that probes
-    // them. A future lazy-slice change must fail HERE, loudly, not as
-    // an opaque destroyed-broadcast error at the caller's next action.
+    // LocalRelation leaves only): results and later iterations replay
+    // stored blocks and never re-run iteration lineage, whose
+    // per-iteration state (session pins, retired checkpoints) is gone
+    // once the fixpoint returns. A future lazy-slice change must fail
+    // HERE, loudly, not as a wrong or failing re-evaluation later.
     assert(Evaluator.materializedPlan(df),
       s"non-materialized slice plan: ${df.queryExecution.logical.nodeName}")
   }
@@ -555,22 +568,21 @@ final class Evaluator(
   /** Counts of within-task localiterate fixpoints run (spec hook). */
   var localIterateRuns: Int = 0
 
-  import Evaluator.{TaskRule, TaskStep}
-
   /** Within-task local fixpoint for DECOMPOSABLE programs (the
     * Spark-native analog of the reference's within-task iteration,
     * FixedPointResultTask.scala:56-103 + BlockManager.replaceLocalBlock
     * — here a single `mapPartitions` wave instead of a scheduler fork):
     * eligible when every recursive rule of a single-pred clique is a
-    * linear join of ONE recursive atom with any number of static atoms
-    * (plain variables, probed left-to-right like the rule compiler's
-    * SIPS) whose head keeps the pivot positions from the recursive
-    * atom. Each
-    * pivot-hash partition then iterates semi-naive LOCALLY against a
-    * broadcast multimap of the static side: a derived row inherits its
-    * parent's pivot values, so it lands in the partition that derived
-    * it — the global fixpoint is the disjoint union of the local ones,
-    * one job wave for the whole recursion instead of one per iteration.
+    * linear join of ONE recursive atom with one or more positive static
+    * atoms and nothing else (plain variables, probed left-to-right like
+    * the rule compiler's SIPS) whose head keeps the pivot positions
+    * from the recursive atom. Each pivot-hash partition then iterates
+    * semi-naive LOCALLY against a broadcast multimap of the static
+    * side: a derived row inherits its parent's pivot values, so it
+    * lands in the partition that derived it — the global fixpoint is
+    * the disjoint union of the local ones, one job wave for the whole
+    * recursion instead of one per iteration. The rules lower through
+    * `lowerSetRule`, the driver-resident set kernel's lowering.
     * Returns None (caller falls back to the looped paths) on any
     * ineligible shape, non-value-comparable or mismatched column types,
     * or a static side past the collect cap. */
@@ -592,105 +604,18 @@ final class Evaluator(
     val schema = seeded.schema
     if (!schema.forall(f => valueComparable(f.dataType))) return None
 
-    // plain variables only; each anonymous `_` becomes a fresh name
-    // (never shared, never equal to another anon), tagged per atom so
-    // two atoms' anons don't alias
-    def vars(args: Seq[Term], tag: String): Option[Seq[String]] =
-      if (args.forall(a => a.isInstanceOf[Variable] || a == Anon))
-        Some(args.zipWithIndex.map {
-          case (Variable(n), _) => n
-          case (_, i) => s"__anon_${tag}_$i"
-        })
-      else None
-
-    // memo static collects: the same (pred, within-atom equalities) is
-    // collected once even when several rules/atoms reference it (see
-    // staticRowsMemo: predDF not cachedStatic — collect-once, no
-    // persist pinning). The ECONOMIC ceiling applies here too: a
-    // static past it makes the driver collect + multimap build +
-    // broadcast the dominant bill regardless of seed count
-    // (dl_sssp_localiter sf10: a 1-row seed behind a 2.6M-row static
-    // collect measured 44.6s vs ~4s looped/fragment).
-    val staticRows = staticRowsMemo(
-      if (conf.localIterateAutoSeedRows > 0)
-        conf.localIterateMaxStaticRows.min(conf.localIterateAutoSeedRows)
-      else conf.localIterateMaxStaticRows)
-
-    /** Lower one rule: the recursive atom binds env slots 0..arity-1;
-      * each static atom (body order, left-to-right SIPS like the rule
-      * compiler) probes a multimap keyed on its already-bound
-      * positions and binds its new variables. Any deviation from the
-      * decomposable shape → None. `collect=false` runs the SAME shape
-      * analysis without collecting any static (job-free, ADVICE r19:
-      * the seed-count probe must run only once the shape is known
-      * decomposable — a broadcastStatic-eligible clique with
-      * non-decomposable rules must stay job-free here, like the
-      * monotonic twin's shape-first ordering). */
-    def parse(r: Rule, collect: Boolean = true): Option[TaskRule] = {
-      val atoms = r.body.collect { case a: BodyAtom => a }
-      if (atoms.length != r.body.length || atoms.exists(_.negated)) return None
-      val recs = atoms.filter(a => clique.preds(a.pred))
-      val stats = atoms.filterNot(a => clique.preds(a.pred))
-      if (recs.length != 1 || stats.isEmpty) return None
-      val rv = vars(recs.head.args, "r").getOrElse(return None)
-      if (rv.distinct.length != rv.length || rv.length != schema.length)
-        return None
-      // env: slot per variable, rec vars first; parallel type vector
-      val slot = mutable.LinkedHashMap[String, Int]()
-      val envType = mutable.ArrayBuffer[org.apache.spark.sql.types.DataType]()
-      rv.zipWithIndex.foreach { case (n, i) =>
-        slot(n) = i; envType += schema(i).dataType
-      }
-      val steps = stats.zipWithIndex.map { case (atom, ai) =>
-        val sv = vars(atom.args, s"s$ai").getOrElse(return None)
-        val sSchema = predDF(atom.pred).schema
-        if (sv.length != sSchema.length) return None
-        if (!sSchema.forall(f => valueComparable(f.dataType))) return None
-        val keyPos = mutable.Buffer[Int]()
-        val keyEnv = mutable.Buffer[Int]()
-        val binds = mutable.Buffer[(Int, Int)]()
-        val eqs = mutable.Buffer[(Int, Int)]()
-        val newInAtom = mutable.Map[String, Int]()
-        sv.zipWithIndex.foreach { case (n, i) =>
-          slot.get(n) match {
-            case Some(s) if !newInAtom.contains(n) =>
-              // bound before this atom: every occurrence keys the probe
-              if (envType(s) != sSchema(i).dataType) return None
-              keyPos += i; keyEnv += s
-            case _ =>
-              newInAtom.get(n) match {
-                case Some(first) => eqs += ((first, i)) // repeated new var
-                case None =>
-                  newInAtom(n) = i
-                  slot(n) = envType.length
-                  envType += sSchema(i).dataType
-                  binds += ((i, slot(n)))
-              }
-          }
-        }
-        val table =
-          if (!collect) Map.empty[Seq[Any], IndexedSeq[IndexedSeq[Any]]]
-          else {
-            val rows = staticRows(atom.pred, eqs.toSeq).getOrElse(return None)
-            rows.groupBy(row => keyPos.toSeq.map(row): Seq[Any])
-          }
-        TaskStep(keyEnv.toSeq, binds.toSeq, table)
-      }.toIndexedSeq
-      val head = r.head.args.map {
-        case PlainArg(TermExpr(Variable(n))) => slot.getOrElse(n, return None)
-        case _ => return None
-      }.toIndexedSeq
-      if (head.length != schema.length) return None
-      if (!head.indices.forall(h => envType(head(h)) == schema(h).dataType))
-        return None
-      // partition closure: pivot positions must carry the recursive
-      // atom's value at the SAME position (env slot i = rec position i)
-      if (!pivot.forall(i => head.lift(i).contains(i))) return None
-      Some(TaskRule(envType.length, steps, head))
-    }
+    // positive atoms only, at least one static; the lowered head must
+    // carry the recursive atom's value at every pivot position (env
+    // slot i = recursive position i), so derivations stay in their
+    // partition
+    def lower(r: Rule, staticRows: StaticRows): Option[Evaluator.MutualRule] =
+      if (!r.body.forall { case a: BodyAtom => !a.negated; case _ => false } ||
+          r.bodyAtoms.forall(a => clique.preds(a.pred))) None
+      else lowerSetRule(clique, r, p, _ => schema, staticRows)
+        .filter(mr => pivot.forall(i => mr.head.lift(i).contains(i)))
     // job-free shape pass first (ADVICE r19): ineligible rule shapes
     // bail before the seed-count probe or any static collect runs
-    if (recRules.exists(r => parse(r, collect = false).isEmpty)) return None
+    if (recRules.exists(r => lower(r, noStatics).isEmpty)) return None
     // Economic seed ceiling (r19): the one-wave fixpoint is a
     // per-partition boxed-row HashSet loop — it wins when the fixpoint
     // is job-latency-bound (small seeds) and loses 3.6× to the looped
@@ -701,9 +626,13 @@ final class Evaluator(
     // ineligible shape.
     if (conf.localIterateAutoSeedRows > 0 &&
         seeded.count() > conf.localIterateAutoSeedRows) return None
-    val taskRulesOpt = recRules.map(r => parse(r))
-    if (taskRulesOpt.exists(_.isEmpty)) return None
-    val taskRules = taskRulesOpt.flatten
+    // The ECONOMIC ceiling applies to the static collects too: a
+    // static past it makes the driver collect + multimap build +
+    // broadcast the dominant bill regardless of seed count
+    // (dl_sssp_localiter sf10: a 1-row seed behind a 2.6M-row static
+    // collect measured 44.6s vs ~4s looped/fragment).
+    val staticRows = staticRowsUpTo(localIterateStaticCap)
+    val rules = recRules.map(r => lower(r, staticRows).getOrElse(return None))
 
     // ---- one task wave: pivot-partitioned seed, local fixpoints
     localIterateRuns += 1
@@ -711,53 +640,20 @@ final class Evaluator(
     val seedPart =
       if (pvCols.isEmpty) seeded
       else seeded.repartition(nParts, pvCols.map(seeded.col): _*)
-    val bc = spark.sparkContext.broadcast(taskRules)
-    val out = seedPart.mapPartitions { it =>
-      val rules = bc.value
-      val all = new java.util.HashSet[IndexedSeq[Any]]()
-      var frontier = mutable.ArrayBuffer[IndexedSeq[Any]]()
-      it.foreach { row =>
-        val v = row.toSeq.toIndexedSeq
-        if (all.add(v)) frontier += v
-      }
-      while (frontier.nonEmpty) {
-        val next = mutable.ArrayBuffer[IndexedSeq[Any]]()
-        var i = 0
-        while (i < frontier.length) {
-          val row = frontier(i)
-          rules.foreach { tr =>
-            val env = new Array[Any](tr.envSize)
-            var k = 0
-            while (k < row.length) { env(k) = row(k); k += 1 }
-            def go(j: Int): Unit =
-              if (j == tr.steps.length) {
-                val derived: IndexedSeq[Any] = tr.head.map(env)
-                if (all.add(derived)) next += derived
-              } else {
-                val st = tr.steps(j)
-                st.table.get(st.keyEnv.map(s => env(s)): Seq[Any])
-                  .foreach(_.foreach { srow =>
-                    st.binds.foreach { case (pos, s) => env(s) = srow(pos) }
-                    go(j + 1)
-                  })
-              }
-            go(0)
-          }
-          i += 1
-        }
-        frontier = next
-      }
-      val iter = all.iterator()
-      new Iterator[org.apache.spark.sql.Row] {
-        def hasNext: Boolean = iter.hasNext
-        def next(): org.apache.spark.sql.Row =
-          org.apache.spark.sql.Row.fromSeq(iter.next())
-      }
-    }(org.apache.spark.sql.Encoders.row(schema))
+    val bc = spark.sparkContext.broadcast(rules.toIndexedSeq)
+    val out = seedPart.mapPartitions(Evaluator.setPartitionFixpoint(bc))(
+      org.apache.spark.sql.Encoders.row(schema))
 
     val (res, _) = materialize(out.toDF())
     Some(res)
   }
+
+  /** Static-collect ceiling of the task-wave paths: `maxstaticrows`,
+    * lowered to the economic `autoseedrows` ceiling when one is set. */
+  private def localIterateStaticCap: Long =
+    if (conf.localIterateAutoSeedRows > 0)
+      conf.localIterateMaxStaticRows.min(conf.localIterateAutoSeedRows)
+    else conf.localIterateMaxStaticRows
 
   /** Counts of monotonic within-task fixpoints run (spec hook). */
   var localIterateMonoRuns: Int = 0
@@ -773,14 +669,6 @@ final class Evaluator(
       recRules: Seq[Rule],
       seed0: DataFrame,
       compileStep: (Rule, DataFrame) => DataFrame): Option[DataFrame] = {
-    import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
-    def intRank(dt: DataType): Option[Int] = dt match {
-      case org.apache.spark.sql.types.ByteType => Some(1)
-      case org.apache.spark.sql.types.ShortType => Some(2)
-      case IntegerType => Some(3)
-      case LongType => Some(4)
-      case _ => None
-    }
     var seedW = seed0
     var stableTypes = false
     var guard = 0
@@ -794,11 +682,7 @@ final class Evaluator(
           catch { case scala.util.control.NonFatal(_) => return None }
         if (step.schema.length != cur.schema.length) return None
         val targets = cur.schema.zip(step.schema).map { case (a, b) =>
-          if (a.dataType == b.dataType) a.dataType
-          else (intRank(a.dataType), intRank(b.dataType)) match {
-            case (Some(x), Some(y)) => if (x >= y) a.dataType else b.dataType
-            case _ => return None
-          }
+          Evaluator.widerIntegral(a.dataType, b.dataType).getOrElse(return None)
         }
         if (targets != cur.schema.map(_.dataType)) {
           seedW = cur.select(cur.schema.zip(targets).map { case (f, t) =>
@@ -817,47 +701,75 @@ final class Evaluator(
     * static must be rejected before any of its rows are gathered). */
   var staticCollectPeakRows: Long = 0L
 
-  /** Memoized capped static-relation collects for the local fixpoint
-    * paths: the same (pred, within-atom equalities) is collected once
-    * even when several rules/atoms reference it. A static over the cap
-    * is rejected before any row is gathered: by its row count when the
-    * plan statistics know it (a loaded cache, a LocalRelation, a
-    * range), else by one count job. */
-  private def staticRowsMemo(maxRows: Long)
-      : (String, Seq[(Int, Int)]) => Option[IndexedSeq[IndexedSeq[Any]]] = {
-    val cap = maxRows.min(1L << 24).toInt
-    val memo =
-      mutable.Map[(String, Seq[(Int, Int)]), Option[IndexedSeq[IndexedSeq[Any]]]]()
-    (pred, eqs) =>
-      memo.getOrElseUpdate((pred, eqs), {
-        // predDF, not cachedStatic: these paths read the static exactly
-        // once (the collect below) — persisting it would pin dead
-        // blocks until close(); a bail to a looped path re-persists
-        // through that path's own cachedStatic
-        val df0 = predDF(pred)
-        val df = eqs.foldLeft(df0) { case (d, (a, b)) =>
-          d.filter(d(d.columns(a)) === d(d.columns(b)))
-        }
-        // the known count is of the unfiltered relation: exact for a
-        // plain static, an upper bound under within-atom equalities.
-        // Otherwise one narrow job counts the executed plan's rows (a
-        // Dataset count would add an aggregate stage, two jobs under
-        // AQE). Either way the collect below is known to fit the cap.
-        val overCap = Evaluator.knownRowCount(df0.queryExecution.optimizedPlan) match {
-          case Some(n) if n <= cap => false
-          case Some(_) if eqs.isEmpty => true
-          case _ => df.queryExecution.toRdd.count() > cap
-        }
-        if (overCap) None
-        else {
-          val rows = df.collect()
-          staticCollectPeakRows = staticCollectPeakRows.max(rows.length.toLong)
-          // null-free contract: the lowered probes/filters use plain
-          // equality and unboxed compares — a null row bails the path
-          if (rows.exists(_.anyNull)) None
-          else Some(rows.iterator.map(r => r.toSeq.toIndexedSeq).toIndexedSeq)
-        }
-      })
+  /** Static relations collected by the local fixpoint paths, keyed by
+    * (pred, within-atom equalities): `Right(rows)` is the complete
+    * null-free row set, `Left(n)` the verdict that the relation holds
+    * more than `n` rows (`Long.MaxValue` when it holds a null, which no
+    * cap admits). One collect serves every rule, atom and query of this
+    * evaluator; the evaluator is rebuilt whenever the program or a
+    * relation changes, and close() clears it. */
+  private val staticRowsCache = mutable.Map[(String, Seq[(Int, Int)]),
+    Either[Long, IndexedSeq[IndexedSeq[Any]]]]()
+
+  /** Static rows by (pred, within-atom equalities), as the local
+    * lowerings consume them; None rejects the lowering. */
+  private type StaticRows =
+    (String, Seq[(Int, Int)]) => Option[IndexedSeq[IndexedSeq[Any]]]
+
+  /** Every static empty: lowers a rule's shape without running a job. */
+  private val noStatics: StaticRows = (_, _) => Some(IndexedSeq.empty)
+
+  /** Capped static-relation lookup for the local fixpoint paths: the
+    * rows when the relation has at most `maxRows` rows, else None. A
+    * static over the cap is rejected before any row is gathered: by its
+    * row count when the plan statistics know it (a loaded cache, a
+    * LocalRelation, a range), else by one count job. An over-cap
+    * verdict taken at a smaller cap is re-checked at this one. */
+  private def staticRowsUpTo(maxRows: Long): StaticRows = {
+    val cap = maxRows.min(1L << 24)
+    (pred, eqs) => {
+      val entry = staticRowsCache.get((pred, eqs)) match {
+        case Some(Left(over)) if over < cap => collectStatic(pred, eqs, cap)
+        case Some(e) => e
+        case None => collectStatic(pred, eqs, cap)
+      }
+      staticRowsCache((pred, eqs)) = entry
+      entry match {
+        case Right(rows) if rows.length <= cap => Some(rows)
+        case _ => None
+      }
+    }
+  }
+
+  private def collectStatic(pred: String, eqs: Seq[(Int, Int)], cap: Long)
+      : Either[Long, IndexedSeq[IndexedSeq[Any]]] = {
+    // predDF, not cachedStatic: these paths read the static exactly
+    // once (the collect below) — persisting it would pin dead blocks
+    // until close(); a bail to a looped path re-persists through that
+    // path's own cachedStatic
+    val df0 = predDF(pred)
+    val df = eqs.foldLeft(df0) { case (d, (a, b)) =>
+      d.filter(d(d.columns(a)) === d(d.columns(b)))
+    }
+    // the known count is of the unfiltered relation: exact for a plain
+    // static, an upper bound under within-atom equalities. Otherwise
+    // one narrow job counts the executed plan's rows (a Dataset count
+    // would add an aggregate stage, two jobs under AQE). Either way the
+    // collect below is known to fit the cap.
+    val overCap = Evaluator.knownRowCount(df0.queryExecution.optimizedPlan) match {
+      case Some(n) if n <= cap => false
+      case Some(_) if eqs.isEmpty => true
+      case _ => df.queryExecution.toRdd.count() > cap
+    }
+    if (overCap) Left(cap)
+    else {
+      val rows = df.collect()
+      staticCollectPeakRows = staticCollectPeakRows.max(rows.length.toLong)
+      // null-free contract: the lowered probes/filters use plain
+      // equality and unboxed compares — a null row bails the path
+      if (rows.exists(_.anyNull)) Left(Long.MaxValue)
+      else Right(rows.iterator.map(r => r.toSeq.toIndexedSeq).toIndexedSeq)
+    }
   }
 
   /** Lower one LINEAR rule body for local evaluation: the single
@@ -883,7 +795,7 @@ final class Evaluator(
       clique: Analysis#Clique,
       r: Rule,
       recSchema: org.apache.spark.sql.types.StructType,
-      staticRows: (String, Seq[(Int, Int)]) => Option[IndexedSeq[IndexedSeq[Any]]],
+      staticRows: StaticRows,
       monoSlot: Int = -1)
       : Option[(IndexedSeq[Evaluator.MonoStep],
           mutable.LinkedHashMap[String, Int],
@@ -1027,6 +939,36 @@ final class Evaluator(
     Some((steps.toIndexedSeq, slot, envType.toIndexedSeq, lower))
   }
 
+  /** Lower one LINEAR set-semantics rule with head `headPred` for the
+    * driver-resident set kernel and the localiterate wave: the body
+    * through `lowerLinearBody` (the recursive atom's predicate fixes
+    * the pre-bound schema), the head to plain bound variables whose
+    * types match `schemaOf(headPred)` exactly. None on any other
+    * shape. */
+  private def lowerSetRule(
+      clique: Analysis#Clique,
+      r: Rule,
+      headPred: String,
+      schemaOf: String => org.apache.spark.sql.types.StructType,
+      staticRows: StaticRows): Option[Evaluator.MutualRule] = {
+    val recs = r.body.collect { case a: BodyAtom if clique.preds(a.pred) => a }
+    if (recs.length != 1) return None
+    val recPred = recs.head.pred
+    val (steps, slot, envType, _) =
+      lowerLinearBody(clique, r, schemaOf(recPred), staticRows)
+        .getOrElse(return None)
+    val head = r.head.args.map {
+      case PlainArg(TermExpr(Variable(n))) => slot.getOrElse(n, return None)
+      case _ => return None
+    }.toIndexedSeq
+    val headSchema = schemaOf(headPred)
+    if (head.length != headSchema.length ||
+        !head.indices.forall(i => envType(head(i)) == headSchema(i).dataType))
+      return None
+    Some(Evaluator.MutualRule(headPred, recPred, schemaOf(recPred).length,
+      envType.length, steps, head))
+  }
+
   /** Within-task local fixpoint for MONOTONIC (mmin/mmax) cliques — the
     * aggregate half of the reference's within-task iteration
     * (FixedPointResultTask.scala:56-103, iterating AggregateSetRDD
@@ -1056,16 +998,17 @@ final class Evaluator(
     * the looped monotonic paths. */
   /** Shared prologue of the task-local and driver-local monotonic
     * paths: compile + widen the seed, check the schema and aggregate
-    * type, and lower every recursive rule to a `MonoRule`. Returns
-    * (widened seed, schema, lowered rules, agg-is-long), or None on
-    * any ineligible shape. */
+    * type, and screen every recursive rule's shape against empty
+    * statics (no job). Returns (widened seed, schema, agg-is-long, the
+    * lowering of every recursive rule to a `MonoRule` over the given
+    * statics), or None on any ineligible shape. Callers check their
+    * seed before they lower over collected statics. */
   private def lowerMonotonicClique(
       clique: Analysis#Clique,
       p: String,
-      aggIdx: Int,
-      maxStaticRows: Long)
-      : Option[(DataFrame, org.apache.spark.sql.types.StructType,
-          IndexedSeq[Evaluator.MonoRule], Boolean)] = {
+      aggIdx: Int)
+      : Option[(DataFrame, org.apache.spark.sql.types.StructType, Boolean,
+          StaticRows => Option[IndexedSeq[Evaluator.MonoRule]])] = {
     import Evaluator._
     import org.apache.spark.sql.types.{IntegerType, LongType}
     val recRules = clique.recursiveRules(p)
@@ -1084,9 +1027,7 @@ final class Evaluator(
     val aggLong = aggType == LongType
     if (!aggLong && aggType != IntegerType) return None
 
-    val staticRows = staticRowsMemo(maxStaticRows)
-
-    def parse(r: Rule): Option[MonoRule] = {
+    def parse(r: Rule, staticRows: StaticRows): Option[MonoRule] = {
       val (steps, slot, envType, _) =
         lowerLinearBody(clique, r, schema, staticRows, monoSlot = aggIdx)
           .getOrElse(return None)
@@ -1112,9 +1053,12 @@ final class Evaluator(
         group.toIndexedSeq, aggSlot))
     }
 
-    val rulesOpt = recRules.map(parse)
-    if (rulesOpt.exists(_.isEmpty)) return None
-    Some((seed, schema, rulesOpt.flatten.toIndexedSeq, aggLong))
+    def lowerRules(staticRows: StaticRows): Option[IndexedSeq[MonoRule]] = {
+      val rules = recRules.map(r => parse(r, staticRows))
+      if (rules.exists(_.isEmpty)) None else Some(rules.flatten.toIndexedSeq)
+    }
+    if (lowerRules(noStatics).isEmpty) return None
+    Some((seed, schema, aggLong, lowerRules _))
   }
 
   /** Counts of driver-resident monotonic fixpoints run (spec hook). */
@@ -1141,9 +1085,8 @@ final class Evaluator(
       aggIdx: Int): Option[DataFrame] = {
     import Evaluator._
     val spark = org.apache.spark.sql.SparkSession.active
-    val (seed, schema, rules, aggLong) =
-      lowerMonotonicClique(clique, p, aggIdx, 1L << 20)
-        .getOrElse(return None)
+    val (seed, schema, aggLong, lowerRules) =
+      lowerMonotonicClique(clique, p, aggIdx).getOrElse(return None)
     // two ceilings: autoentries is the ECONOMIC one (the single-thread
     // driver loop loses to the distributed merge well before driver
     // memory is at risk — sf1.0 A/B: 1.1M-entry APSP 13.4s driver vs
@@ -1156,6 +1099,8 @@ final class Evaluator(
     // cannot — bail to them on any null (user-registered EDBs only:
     // Datalog-source tuples are non-null)
     if (seedRows.exists(_.anyNull)) return None
+    // statics only once the seed fits (≤ 1M rows each)
+    val rules = lowerRules(staticRowsUpTo(1L << 20)).getOrElse(return None)
 
     monotonicLocalRuns += 1
     val groupIdxs = schema.indices.filterNot(_ == aggIdx).toIndexedSeq
@@ -1250,7 +1195,7 @@ final class Evaluator(
     * set semantics is inflationary and schedule-independent, so this
     * reaches the looped round-robin's exact fixpoint. Total scheduled
     * jobs: one narrow collect per seed (none for a LocalRelation seed)
-    * plus one memoized collect per static relation — ZERO per
+    * plus one collect per static relation per evaluator — ZERO per
     * iteration. `seedsDf` already carries any bound-query filter.
     * Overflow of the shared monotoniclocal entry caps, or a static
     * past 1M rows, bails to the looped paths (work is redone there;
@@ -1294,33 +1239,13 @@ final class Evaluator(
         schemas(q).forall(f => valueComparable(f.dataType)))) return None
 
     // ---- lower every member's recursive rules (statics ≤ 1M rows,
-    // the driverMonotonicFixpoint cap)
-    def lowerAll(staticRows: (String, Seq[(Int, Int)]) =>
-        Option[IndexedSeq[IndexedSeq[Any]]]): Option[Seq[MutualRule]] = {
-      val lowered = mutable.ArrayBuffer[MutualRule]()
-      for (p <- preds; r <- clique.recursiveRules(p)) {
-        val recs = r.body.collect {
-          case a: BodyAtom if clique.preds(a.pred) => a }
-        if (recs.length != 1) return None // non-linear: looped path
-        val q = recs.head.pred
-        val (steps, slot, envType, _) =
-          lowerLinearBody(clique, r, schemas(q), staticRows)
-            .getOrElse(return None)
-        val head = r.head.args.map {
-          case PlainArg(TermExpr(Variable(n))) =>
-            slot.getOrElse(n, return None)
-          case _ => return None
-        }.toIndexedSeq
-        if (head.length != schemas(p).length) return None
-        if (!head.indices.forall(i =>
-            envType(head(i)) == schemas(p)(i).dataType)) return None
-        lowered += MutualRule(p, q, schemas(q).length, envType.length,
-          steps, head)
-      }
-      Some(lowered.toSeq)
-    }
+    // the driverMonotonicFixpoint cap); non-linear rules bail
+    def lowerAll(staticRows: StaticRows): Option[Seq[MutualRule]] =
+      Some(for (p <- preds; r <- clique.recursiveRules(p))
+        yield lowerSetRule(clique, r, p, schemas, staticRows)
+          .getOrElse(return None))
     // shape screen against empty statics: no job before the shape is known
-    if (lowerAll((_, _) => Some(IndexedSeq.empty)).isEmpty) return None
+    if (lowerAll(noStatics).isEmpty) return None
 
     // ---- seeds under the shared entry caps (economic ceiling below
     // the memory one, as monotoniclocal: the single-thread driver loop
@@ -1335,7 +1260,7 @@ final class Evaluator(
       if (rows.exists(_.anyNull)) return None
       seedRows(q) = rows
     }
-    val lowered = lowerAll(staticRowsMemo(1L << 20)).getOrElse(return None)
+    val lowered = lowerAll(staticRowsUpTo(1L << 20)).getOrElse(return None)
 
     mutualLocalRuns += 1
     val facts = preds.map(q =>
@@ -1404,22 +1329,17 @@ final class Evaluator(
       reAgg: DataFrame => DataFrame): Option[DataFrame] = {
     val spark = org.apache.spark.sql.SparkSession.active
     val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val (seed, schema, rules, aggLong) =
-      lowerMonotonicClique(clique, p, aggIdx,
-        // same economic static ceiling as localIterate: past it the
-        // driver collect + multimap + broadcast dominate any wave
-        if (conf.localIterateAutoSeedRows > 0)
-          conf.localIterateMaxStaticRows.min(conf.localIterateAutoSeedRows)
-        else conf.localIterateMaxStaticRows)
-        .getOrElse(return None)
+    val (seed, schema, aggLong, lowerRules) =
+      lowerMonotonicClique(clique, p, aggIdx).getOrElse(return None)
     // economic seed ceiling — see localIterate (the monotonic wave's
     // per-partition HashMap fixpoint has the same boxed-row economics:
     // dl_apsp sf10 A/B 56.1s wave vs 19.4s looped). Checked after the
-    // lowering so shape ineligibility stays job-free; the lowering's
-    // static collects are sunk cost on an over-ceiling seed, bounded
-    // by maxstaticrows.
+    // job-free shape screen and before any static collect, under the
+    // same economic static ceiling as localIterate.
     if (conf.localIterateAutoSeedRows > 0 &&
         seed.count() > conf.localIterateAutoSeedRows) return None
+    val rules = lowerRules(staticRowsUpTo(localIterateStaticCap))
+      .getOrElse(return None)
 
     // ---- one task wave of local value-improving fixpoints
     localIterateMonoRuns += 1
@@ -1521,21 +1441,6 @@ final class Evaluator(
     // mode absorbs it by widening the stored keys once instead of
     // abandoning the mode on the first Int-seed/Long-EDB program.
     // Fractional/decimal mixes bail to the cluster path.
-    def intRank(dt: org.apache.spark.sql.types.DataType): Option[Int] = dt match {
-      case org.apache.spark.sql.types.ByteType => Some(1)
-      case org.apache.spark.sql.types.ShortType => Some(2)
-      case org.apache.spark.sql.types.IntegerType => Some(3)
-      case org.apache.spark.sql.types.LongType => Some(4)
-      case _ => None
-    }
-    def widen(a: org.apache.spark.sql.types.DataType,
-        b: org.apache.spark.sql.types.DataType)
-        : Option[org.apache.spark.sql.types.DataType] =
-      if (a == b) Some(a)
-      else (intRank(a), intRank(b)) match {
-        case (Some(x), Some(y)) => Some(if (x > y) a else b)
-        case _ => None
-      }
     def castVal(v: Any, dt: org.apache.spark.sql.types.DataType): Any = v match {
       case null => null
       case n: java.lang.Number => dt match {
@@ -1557,7 +1462,7 @@ final class Evaluator(
           val ut = u.schema.map(_.dataType)
           if (st.length != ut.length) None
           else {
-            val ws = st.zip(ut).map { case (a, b) => widen(a, b) }
+            val ws = st.zip(ut).map { case (a, b) => Evaluator.widerIntegral(a, b) }
             if (ws.forall(_.isDefined)) Some(ws.map(_.get)) else None
           }
         }
@@ -1635,61 +1540,12 @@ final class Evaluator(
     def repDedup(df: DataFrame, pivot: Seq[String]): DataFrame =
       df.repartition(nParts, pivot.map(df.col).toIndexedSeq: _*).dropDuplicates()
 
-    // Bloom pre-filter state (`spark.datalog.recursion.bloomprefilter`):
-    // one sketch per predicate over its accumulated fact set, fed by
-    // xxhash64(full row) folded into the existing checkpoint jobs.
-    // SOUNDNESS INVARIANT: every row of every slice in `chains(p)` must
-    // have been hashed into `blooms(p)` before diffChain consults it —
-    // sliceOf inserts at slice creation (checkpoint pass, or
-    // driver-side for collected local slices); compaction re-unions
-    // existing rows so it skips re-insertion; schema WIDENING recasts
-    // re-insert under the widened types (the stale narrow hashes remain
-    // as harmless false positives). Scoped to the copart path with the
-    // flip available — the only consumer.
-    val blooms = mutable.Map[String, FactHashAccumulator]()
-    def bloomFor(p: String): Option[FactHashAccumulator] =
-      if (conf.bloomPrefilter == "false" || !copart || conf.diffFlip == "false")
-        None
-      else Some(blooms.getOrElseUpdate(p, {
-        val a = new FactHashAccumulator(conf.bloomExpectedItems, conf.bloomFpp)
-        spark.sparkContext.register(a, s"graft.bloom.$p")
-        a
-      }))
-    // `auto` keeps accumulating hashes from iteration 0 (soundness: the
-    // sketch must cover EVERY slice) but pays for the probe — the
-    // broadcast sketch and the per-candidate-row hash — only once the
-    // fact set is large enough that the semi build it narrows dominates
-    val bloomProbeMinRows =
-      if (conf.bloomPrefilter == "true") 1L else conf.bloomMinRows
-    // One broadcast of the serialized sketch per (pred, sketch
-    // version): a plan-literal sketch serializes into EVERY task binary
-    // (0.9 MB × 32 partitions × engaged iterations ≈ 2.4s of pure
-    // task shipping at sf1.0), a broadcast ships once per executor.
-    // serializedBloom memoizes its byte array until new hashes arrive,
-    // so reference identity detects staleness. All broadcasts retire
-    // when the fixpoint ends (slices are materialized checkpoints — no
-    // returned lineage references the probes).
-    val bloomBcs = mutable.Map[String,
-      (Array[Byte], org.apache.spark.broadcast.Broadcast[Array[Byte]])]()
-    val bloomBcsRetired =
-      mutable.Buffer[org.apache.spark.broadcast.Broadcast[Array[Byte]]]()
-    def bloomBcFor(pred: String, bytes: Array[Byte])
-        : org.apache.spark.broadcast.Broadcast[Array[Byte]] =
-      bloomBcs.get(pred) match {
-        case Some((prev, bc)) if prev eq bytes => bc
-        case old =>
-          old.foreach { case (_, bc) => bloomBcsRetired += bc }
-          val bc = spark.sparkContext.broadcast(bytes)
-          bloomBcs(pred) = (bytes, bc)
-          bc
-      }
-
     /** claim-checkpoint (or localize when tiny) an iteration result
       * that is physically hash-partitioned on the pivot; the claim is
       * validated against the executed plan and dropped if the layout
       * does not hold (self-healing: the next iteration repartitions). */
     def sliceOf(df: DataFrame, pivot: Seq[String], pred: String, iter: Int,
-        preferLocal: Boolean = false, addToBloom: Boolean = true): (Slice, Long) = {
+        preferLocal: Boolean = false): (Slice, Long) = {
       // small-frontier fast path — see materialize(); a local slice
       // needs no partitioning claim (joins against it broadcast)
       if (preferLocal && !conf.logPlans) {
@@ -1702,29 +1558,15 @@ final class Evaluator(
             val n = rows.length.toLong
             if (n > 0) localizedSlices += 1
             val local = spark.createDataFrame(rows.toSeq.asJava, df.schema)
-            // collected rows never passed a checkpoint job, so hash them
-            // here: the xxhash64 projection over a LocalRelation folds
-            // driver-side (ConvertToLocalRelation) — no job, and the
-            // hash is the same Catalyst expression the probe side uses
-            if (addToBloom && n > 0) bloomFor(pred).foreach { acc =>
-              local.select(org.apache.spark.sql.functions
-                  .xxhash64(local.columns.map(local(_)).toIndexedSeq: _*))
-                .collect().foreach(r => acc.add(r.getLong(0)))
-            }
             return (Slice(local, isLocal = true, rows = n), n)
           case None =>
             return sliceOf(
               df.repartition(nParts, pivot.map(df.col).toIndexedSeq: _*),
-              pivot, pred, iter, preferLocal = false, addToBloom = addToBloom)
+              pivot, pred, iter)
         }
       }
-      val bloomAcc = if (addToBloom) bloomFor(pred) else None
-      val (ck, held, n) = bloomAcc match {
-        case Some(acc) => org.apache.spark.sql.GraftColumnBridge
-          .checkpointWithPartitioningHashed(df, pivot, nParts, acc)
-        case None => org.apache.spark.sql.GraftColumnBridge
-          .checkpointWithPartitioning(df, pivot, nParts)
-      }
+      val (ck, held, n) = org.apache.spark.sql.GraftColumnBridge
+        .checkpointWithPartitioning(df, pivot, nParts)
       track(ck)
       if (conf.logPlans)
         iterationPlanLog += ((pred, iter,
@@ -1774,7 +1616,7 @@ final class Evaluator(
         clusters.map(_.rows).sum >= conf.diffFlipMinRows
     }
 
-    def diffChain(cand: DataFrame, chain: Vector[Slice], pred: String,
+    def diffChain(cand: DataFrame, chain: Vector[Slice],
         allPre: Option[DataFrame] = None): DataFrame = {
       val (locals, clusters) = chain.partition(_.isLocal)
       val base = locals.foldLeft(cand) { (acc, s) =>
@@ -1813,26 +1655,9 @@ final class Evaluator(
             .unionClaimed(clusters.map(_.df), nParts)
             .getOrElse(clusters.map(_.df).reduce(_ union _))
         }
-        // bloom pre-filter: a bloom-NEGATIVE candidate is certainly not
-        // in any slice (no false negatives), so it can never contribute
-        // to `matched` — dropping it shrinks the semi's hash build from
-        // |cand| to |maybe-seen| at the cost of one codegen'd murmur
-        // probe per row. The final anti below still sees every base row,
-        // so certainly-new rows flow through untouched (single output
-        // plan; the claimed layout is preserved).
-        val semiBuild =
-          bloomFor(pred).flatMap(_.serializedBloom(bloomProbeMinRows)) match {
-            case Some(bytes) =>
-              bloomPrefilterSplits += 1
-              cand.filter(org.apache.spark.sql.GraftColumnBridge
-                .bloomMightContainBroadcast(bloomBcFor(pred, bytes),
-                  org.apache.spark.sql.functions.xxhash64(
-                    cand.columns.map(cand(_)).toIndexedSeq: _*)))
-            case _ => cand
-          }
-        val semiCond = allDf.columns.zip(semiBuild.columns)
-          .map { case (a, b) => allDf(a) === semiBuild(b) }.reduce(_ && _)
-        val matched = allDf.join(semiBuild.hint("shuffle_hash"), semiCond, "left_semi")
+        val semiCond = allDf.columns.zip(cand.columns)
+          .map { case (a, b) => allDf(a) === cand(b) }.reduce(_ && _)
+        val matched = allDf.join(cand.hint("shuffle_hash"), semiCond, "left_semi")
         val antiCond = base.columns.zip(matched.columns)
           .map { case (a, b) => base(a) === matched(b) }.reduce(_ && _)
         base.join(matched.hint("shuffle_hash"), antiCond, "left_anti")
@@ -1857,15 +1682,9 @@ final class Evaluator(
     // touched here — it is load-bearing on the unpinned paths (dl_sg
     // 3.9→7.2s with AQE off); the pinned-layout loops disable it
     // separately below once bcStatic/claims are known.
-    val coPartConf = "spark.sql.requireAllClusterKeysForCoPartition"
-    val cpConf = "spark.sql.constraintPropagation.enabled"
-    val pinned = mutable.Buffer[(String, Option[String])]()
-    def pin(k: String, v: String): Unit = {
-      pinned += k -> spark.conf.getOption(k)
-      spark.conf.set(k, v)
-    }
-    if (copart) pin(coPartConf, "false")
-    if (conf.lightPlanning) pin(cpConf, "false")
+    val pins = new ConfPins
+    if (copart) pins.pin("spark.sql.requireAllClusterKeysForCoPartition", "false")
+    if (conf.lightPlanning) pins.pin("spark.sql.constraintPropagation.enabled", "false")
     try {
 
     // Within-task local fixpoint (opt-in): a decomposable program runs
@@ -1940,7 +1759,7 @@ final class Evaluator(
     // pinned layout keep AQE (dl_sg legacy path measured 3.9→7.2s with
     // AQE forced off — it is load-bearing there).
     if (conf.lightPlanning && (bcStatic || claimedStatic.nonEmpty))
-      pin("spark.sql.adaptive.enabled", "false")
+      pins.pin("spark.sql.adaptive.enabled", "false")
 
     // iteration 0: exit rules
     for (p <- preds) {
@@ -1998,8 +1817,7 @@ final class Evaluator(
     // zero-exchange shape (anything with a shuffle exchange is
     // rejected — a ShuffleExchangeExec's dependency is a lazy val and
     // would replay stale map output), claimed non-local delta and
-    // chain, stable schema, same flip arm, no active bloom probe (its
-    // sketch literal changes every round), no logplans. Any miss falls
+    // chain, stable schema, same flip arm, no logplans. Any miss falls
     // back to the compiled path for that iteration.
     final case class IterTemplate(
         plan: org.apache.spark.sql.execution.SparkPlan,
@@ -2015,14 +1833,11 @@ final class Evaluator(
       org.apache.spark.sql.GraftColumnBridge.checkpointedRDD(df)
         .map(_.asInstanceOf[org.apache.spark.rdd.RDD[
           org.apache.spark.sql.catalyst.InternalRow]])
-    def bloomProbeActive(p: String): Boolean =
-      bloomFor(p).exists(_.serializedBloom(bloomProbeMinRows).isDefined)
     def templateUsable(p: String, chain: Vector[Slice]): Boolean =
       conf.planTemplate && bcStatic && !conf.logPlans &&
         iterTemplates.contains(p) &&
         delta.get(p).exists(s => !s.isLocal && s.claimed) &&
-        chain.nonEmpty && chain.forall(s => !s.isLocal && s.claimed) &&
-        !bloomProbeActive(p) && {
+        chain.nonEmpty && chain.forall(s => !s.isLocal && s.claimed) && {
           val t = iterTemplates(p)
           flipFires(chain) == t.flip &&
             delta(p).df.schema.map(_.dataType) == t.types &&
@@ -2130,18 +1945,17 @@ final class Evaluator(
             // broadcast baseline). One claim-checkpoint makes both
             // diff passes read materialized rows; its blocks are dead
             // once the delta checkpoint (whose lineage is truncated)
-            // materializes. Bloom insertion stays with the DELTA slice
-            // — candidate rows may never enter the chain.
+            // materializes.
             val flipWillFire = claimedStatic.nonEmpty &&
               flipFires(chain.filter(!_.isLocal))
             var diffDf: DataFrame = null
             val (s, n) = if (flipWillFire && !delta.get(p).exists(_.isLocal)) {
-              val (candS, _) = sliceOf(candidate, pv, p, iter, addToBloom = false)
-              val r = sliceOf(diffChain(candS.df, chain, p, allPre), pv, p, iter)
+              val (candS, _) = sliceOf(candidate, pv, p, iter)
+              val r = sliceOf(diffChain(candS.df, chain, allPre), pv, p, iter)
               if (!candS.isLocal) retire(candS.df)
               r
             } else {
-              diffDf = diffChain(candidate, chain, p, allPre)
+              diffDf = diffChain(candidate, chain, allPre)
               sliceOf(diffDf, pv, p, iter,
                 preferLocal = delta.get(p).exists(_.isLocal))
             }
@@ -2158,7 +1972,7 @@ final class Evaluator(
             // it; planTemplateEligible enforces exactly that)
             if (conf.planTemplate && bcStatic && !conf.logPlans &&
                 diffDf != null && !s.isLocal && s.claimed &&
-                allPre.isDefined && !bloomProbeActive(p)) {
+                allPre.isDefined) {
               val dRdd = delta.get(p).flatMap(x => rowRddOf(x.df))
               val allCands = (allPre.flatMap(rowRddOf).toSeq ++
                 allView.get(p).flatMap(rowRddOf).toSeq).distinct
@@ -2199,7 +2013,7 @@ final class Evaluator(
                   if (localizable(foldedRows, folded))
                     Slice(folded, isLocal = true, rows = foldedRows)
                   else sliceOf(folded.repartition(nParts, pv.map(folded.col): _*),
-                    pv, p, iter, addToBloom = false)._1
+                    pv, p, iter)._1
                 // in the first local slice's place: the chain head names
                 // the result's columns
                 val at = next.indexWhere(_.isLocal)
@@ -2222,10 +2036,8 @@ final class Evaluator(
                         claimed = true, rows = next.map(_.rows).sum)))
                       .getOrElse(next)
                   else {
-                    // compaction re-unions rows the bloom already holds
                     val (c, _) = sliceOf(
-                      repDedup(next.map(_.df).reduce(_ union _), pv), pv, p,
-                      iter, addToBloom = false)
+                      repDedup(next.map(_.df).reduce(_ union _), pv), pv, p, iter)
                     if (clique.preds.size == 1)
                       next.dropRight(1).foreach(old => retire(old.df))
                     Vector(c)
@@ -2329,7 +2141,7 @@ final class Evaluator(
                 .reexecuteSwapped(t.plan, t.output,
                   (t.deltaRdd -> newDeltaRdd.get) +:
                     t.allRdds.map(_ -> newAllRdd),
-                  pv, nParts, t.held, bloomFor(p).getOrElse(null))
+                  pv, nParts, t.held)
               track(df2)
               planTemplateHits += 1
               if (sys.env.contains("GRAFT_DEBUG_TEMPLATE") &&
@@ -2344,9 +2156,7 @@ final class Evaluator(
               // tiny deltas localize exactly like sliceOf's checkpoint
               // path (measured: dl_reach's small-frontier tail read 15%
               // slower when the template kept it cluster-resident —
-              // the local fast path must stay reachable). Hashes were
-              // already folded into the bloom accumulator during the
-              // reexecute pass, so no re-insertion here. The next
+              // the local fast path must stay reachable). The next
               // iteration's local delta makes the template ineligible
               // and the compiled local-delta path takes over.
               if (localizable(n, df2)) {
@@ -2412,23 +2222,7 @@ final class Evaluator(
             s"recursive predicate $p derived no facts and has no schema")))
     }.toMap
 
-    } finally {
-      pinned.reverseIterator.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-      // every slice is a materialized checkpoint (Slice's constructor
-      // asserts it), so no plan the caller can still run references a
-      // probe broadcast — safe to retire all. Failures are LOGGED, not
-      // silently swallowed: a destroy error here is the first symptom
-      // if the materialized-slice invariant ever breaks (ADVICE r11).
-      (bloomBcsRetired.iterator ++ bloomBcs.valuesIterator.map(_._2))
-        .foreach(bc => try bc.destroy() catch {
-          case e: Throwable =>
-            org.slf4j.LoggerFactory.getLogger(classOf[Evaluator]).warn(
-              s"bloom-probe broadcast destroy failed (id=${bc.id}): $e")
-        })
-    }
+    } finally pins.restore()
   }
 
   // --------------------------- bound-argument pushdown (magic-set-lite)
@@ -2990,12 +2784,9 @@ final class Evaluator(
     // and restore after. Constraint propagation off for the loop too
     // (lightplanning, judge r19 #1): per-iteration optimizer time on
     // already-materialized checkpoints.
-    val coalesceConf = "spark.sql.adaptive.coalescePartitions.enabled"
-    val cpConf2 = "spark.sql.constraintPropagation.enabled"
-    val prevCoalesce = spark.conf.getOption(coalesceConf)
-    val prevCp2 = spark.conf.getOption(cpConf2)
-    spark.conf.set(coalesceConf, "false")
-    if (conf.lightPlanning) spark.conf.set(cpConf2, "false")
+    val pins = new ConfPins
+    pins.pin("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    if (conf.lightPlanning) pins.pin("spark.sql.constraintPropagation.enabled", "false")
     try {
 
     val exits = clique.exitRules(p)
@@ -3075,16 +2866,7 @@ final class Evaluator(
     }
     memo(p) = state
 
-    } finally {
-      prevCoalesce match {
-        case Some(v) => spark.conf.set(coalesceConf, v)
-        case None => spark.conf.unset(coalesceConf)
-      }
-      if (conf.lightPlanning) prevCp2 match {
-        case Some(v) => spark.conf.set(cpConf2, v)
-        case None => spark.conf.unset(cpConf2)
-      }
-    }
+    } finally pins.restore()
   }
 
   /** Soundness precondition for the fragment state's superseded-row
@@ -3417,17 +3199,12 @@ final class Evaluator(
     // nParts for the same reason in reverse: a candidate exchange at
     // the session count would mismatch every claim and re-exchange the
     // state each round. Both restore on exit.
-    val coalesceConf = "spark.sql.adaptive.coalescePartitions.enabled"
-    val partsConf = "spark.sql.shuffle.partitions"
-    val cpConfF = "spark.sql.constraintPropagation.enabled"
-    val prevCoalesce = spark.conf.getOption(coalesceConf)
-    val prevParts = spark.conf.getOption(partsConf)
-    val prevCpF = spark.conf.getOption(cpConfF)
-    spark.conf.set(coalesceConf, "false")
-    spark.conf.set(partsConf, nParts.toString)
+    val pins = new ConfPins
+    pins.pin("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    pins.pin("spark.sql.shuffle.partitions", nParts.toString)
     // constraint propagation off for the loop (lightplanning, judge
     // r19 #1): per-iteration optimizer time on materialized claims
-    if (conf.lightPlanning) spark.conf.set(cpConfF, "false")
+    if (conf.lightPlanning) pins.pin("spark.sql.constraintPropagation.enabled", "false")
     try {
 
     // ---- one-time static-side layout (the dominant per-round term) --
@@ -3595,20 +3372,7 @@ final class Evaluator(
       if (fragments.size == 1) fragments.head
       else reAgg(stateView())
 
-    } finally {
-      prevCoalesce match {
-        case Some(v) => spark.conf.set(coalesceConf, v)
-        case None => spark.conf.unset(coalesceConf)
-      }
-      prevParts match {
-        case Some(v) => spark.conf.set(partsConf, v)
-        case None => spark.conf.unset(partsConf)
-      }
-      if (conf.lightPlanning) prevCpF match {
-        case Some(v) => spark.conf.set(cpConfF, v)
-        case None => spark.conf.unset(cpConfF)
-      }
-    }
+    } finally pins.restore()
   }
 
   /** `mcount<K>` / `msum<(K,V)>` monotonic-aggregate recursion — beyond
@@ -3641,7 +3405,7 @@ final class Evaluator(
     * aggregate values become visible within the round (Gauss-Seidel);
     * the inflationary max-merge fixpoint is schedule-independent, so
     * this converges to the relational loop's exact state. Caps:
-    * statics ≤1M rows (memoized limit-probed collects), support ≤2M
+    * statics ≤1M rows (one collect per static per evaluator), support ≤2M
     * entries — a mid-loop overflow bails to the relational path (its
     * work is redone there; driver memory stays bounded). Returns None
     * on any ineligible shape or cap overflow. */
@@ -3679,7 +3443,7 @@ final class Evaluator(
     // count()/sum() emit LongType; anything else (decimal sums) bails
     if (recSchema(aggIdx).dataType != LongType) return None
 
-    val staticRows = staticRowsMemo(1L << 20)
+    val staticRows = staticRowsUpTo(1L << 20)
     case class SupRule(envSize: Int, steps: IndexedSeq[MonoStep],
         heads: IndexedSeq[EnvExpr])
     def parse(r: Rule): Option[SupRule] = {
@@ -4009,17 +3773,12 @@ final class Evaluator(
     // below nParts and fail the layout claims; subset co-partitioning
     // (join keys (G,K) over hash(G) layouts) needs the co-partition
     // check relaxed. Both scoped to the fixpoint and restored after.
-    val coalesceConf = "spark.sql.adaptive.coalescePartitions.enabled"
-    val subsetConf = "spark.sql.requireAllClusterKeysForCoPartition"
-    val cpConfS = "spark.sql.constraintPropagation.enabled"
-    val prevCoalesce = spark.conf.getOption(coalesceConf)
-    val prevSubset = spark.conf.getOption(subsetConf)
-    val prevCpS = spark.conf.getOption(cpConfS)
-    spark.conf.set(coalesceConf, "false")
-    spark.conf.set(subsetConf, "false")
+    val pins = new ConfPins
+    pins.pin("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    pins.pin("spark.sql.requireAllClusterKeysForCoPartition", "false")
     // constraint propagation off for the loop (lightplanning, judge
     // r19 #1): per-iteration optimizer time on materialized claims
-    if (conf.lightPlanning) spark.conf.set(cpConfS, "false")
+    if (conf.lightPlanning) pins.pin("spark.sql.constraintPropagation.enabled", "false")
     try {
       /** best contribution per (G, K), laid out hash(G): the groupBy's
         * exchange and the repartition are the iteration's only network,
@@ -4216,20 +3975,7 @@ final class Evaluator(
         println(s"[support-writes] $p fragMode=$fragMode " +
           s"checkpointedRows=$ckRowsTotal iters=$iter")
       memo(p) = materialize(aggView(stateDedup()))._1
-    } finally {
-      (prevCoalesce match {
-        case Some(v) => spark.conf.set(coalesceConf, v)
-        case None => spark.conf.unset(coalesceConf)
-      }): Unit
-      prevSubset match {
-        case Some(v) => spark.conf.set(subsetConf, v)
-        case None => spark.conf.unset(subsetConf)
-      }
-      if (conf.lightPlanning) prevCpS match {
-        case Some(v) => spark.conf.set(cpConfS, v)
-        case None => spark.conf.unset(cpConfS)
-      }
-    }
+    } finally pins.restore()
   }
 }
 
@@ -4239,9 +3985,8 @@ object Evaluator extends Serializable {
   /** True when the plan's leaves are all materialized carriers
     * (checkpointed RDD scans / LocalRelations) — i.e. re-evaluating the
     * DataFrame replays stored blocks and can never re-run fixpoint
-    * iteration lineage. Slice construction asserts this (the
-    * bloom-broadcast retirement invariant); MaterializedSliceSpec
-    * exercises it end-to-end. */
+    * iteration lineage. Slice construction asserts this;
+    * MaterializedSliceSpec exercises it end-to-end. */
   private[datalog] def materializedPlan(df: DataFrame): Boolean =
     df.queryExecution.logical.collectLeaves().forall {
       case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => true
@@ -4249,6 +3994,28 @@ object Evaluator extends Serializable {
       case _: org.apache.spark.sql.execution.LogicalRDD => true
       case _ => false
     }
+
+  /** The common type of two column types under integral widening (the
+    * analyzer's Int-vs-Long union coercion): the type itself when both
+    * agree, the wider of two integral types, None for any other mix. */
+  private[datalog] def widerIntegral(
+      a: org.apache.spark.sql.types.DataType,
+      b: org.apache.spark.sql.types.DataType)
+      : Option[org.apache.spark.sql.types.DataType] = {
+    import org.apache.spark.sql.types._
+    def rank(dt: DataType): Option[Int] = dt match {
+      case ByteType => Some(1)
+      case ShortType => Some(2)
+      case IntegerType => Some(3)
+      case LongType => Some(4)
+      case _ => None
+    }
+    if (a == b) Some(a)
+    else (rank(a), rank(b)) match {
+      case (Some(x), Some(y)) => Some(if (x > y) a else b)
+      case _ => None
+    }
+  }
 
   /** Exact row count of an optimized plan known without running a
     * job: projections keep the count of the leaf below them, which
@@ -4291,26 +4058,19 @@ object Evaluator extends Serializable {
     false
   }
 
-  /** One static atom lowered for task-local evaluation (localiterate
-    * path): probe `table` keyed on the env slots bound so far, then
-    * bind the atom's new variables into the env. Top-level so task
-    * closures carry no reference to the (non-serializable) Evaluator. */
+  /** One static atom lowered for local evaluation: probe `table` keyed
+    * on the env slots bound so far, then bind the atom's new variables
+    * into the env. Top-level so task closures carry no reference to the
+    * (non-serializable) Evaluator. */
   private[datalog] final case class TaskStep(
       keyEnv: Seq[Int],
       binds: Seq[(Int, Int)],
       table: Map[Seq[Any], IndexedSeq[IndexedSeq[Any]]])
 
-  /** One recursive rule lowered for task-local evaluation: the
-    * recursive atom fills env slots 0..arity-1, each step probes and
-    * binds left-to-right, `head` projects env slots. */
-  private[datalog] final case class TaskRule(
-      envSize: Int,
-      steps: IndexedSeq[TaskStep],
-      head: IndexedSeq[Int])
-
-  /** One recursive rule of a MUTUAL clique lowered for driver-local
-    * evaluation (judge r15 #3): fires when `recPred`'s frontier yields
-    * a row, which pre-binds env slots 0..recArity-1; `steps`
+  /** One linear set-semantics recursive rule lowered for the
+    * driver-resident set kernel and the localiterate wave
+    * (`lowerSetRule`): fires when `recPred`'s frontier yields a row,
+    * which pre-binds env slots 0..recArity-1; `steps`
     * probe/assign/filter left-to-right; `head` projects env slots into
     * `headPred`'s schema. */
   private[datalog] final case class MutualRule(
@@ -4422,6 +4182,47 @@ object Evaluator extends Serializable {
     go(0)
   }
 
+  /** The per-partition set fixpoint of the localiterate wave: rounds
+    * of the lowered rules over this partition's frontier until no rule
+    * derives a new row. A static factory on the companion so the task
+    * closure captures only the broadcast handle. */
+  private[datalog] def setPartitionFixpoint(
+      bc: org.apache.spark.broadcast.Broadcast[IndexedSeq[MutualRule]])
+      : Iterator[org.apache.spark.sql.Row] => Iterator[org.apache.spark.sql.Row] =
+    (it: Iterator[org.apache.spark.sql.Row]) => {
+      val rules = bc.value
+      val all = new java.util.HashSet[IndexedSeq[Any]]()
+      var frontier = mutable.ArrayBuffer[IndexedSeq[Any]]()
+      it.foreach { row =>
+        val v = row.toSeq.toIndexedSeq
+        if (all.add(v)) frontier += v
+      }
+      while (frontier.nonEmpty) {
+        val next = mutable.ArrayBuffer[IndexedSeq[Any]]()
+        var i = 0
+        while (i < frontier.length) {
+          val row = frontier(i)
+          rules.foreach { mr =>
+            val env = new Array[Any](mr.envSize)
+            var k = 0
+            while (k < mr.recArity) { env(k) = row(k); k += 1 }
+            runMonoSteps(mr.steps, env, () => {
+              val derived: IndexedSeq[Any] = mr.head.map(env)
+              if (all.add(derived)) next += derived
+            })
+          }
+          i += 1
+        }
+        frontier = next
+      }
+      val iter = all.iterator()
+      new Iterator[org.apache.spark.sql.Row] {
+        def hasNext: Boolean = iter.hasNext
+        def next(): org.apache.spark.sql.Row =
+          org.apache.spark.sql.Row.fromSeq(iter.next())
+      }
+    }
+
   /** The per-partition monotonic local fixpoint (localIterateMonotonic
     * body). A static factory on the companion so the task closure
     * captures only the broadcast handle and primitives — never the
@@ -4470,7 +4271,7 @@ object Evaluator extends Serializable {
       // in better() — silently diverging from the looped reAgg's
       // null-ignoring min/max — and a stored null best value re-pushes
       // its row every round (best.get(g) == null means "absent").
-      // Statics are already guaranteed null-free (staticRowsMemo bails
+      // Statics are already guaranteed null-free (staticRowsUpTo bails
       // the lowering), and the int/long arithmetic steps preserve
       // non-nullness, so checking the incoming seed rows suffices. The
       // marker aborts the wave; the driver catches it and falls back

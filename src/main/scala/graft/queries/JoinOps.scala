@@ -8,8 +8,7 @@ import org.apache.spark.sql.GraftColumnBridge
   * 100 TB engine applies when the build side is too big to broadcast as
   * a hash table but its SKETCH is not (Spark's own InjectRuntimeFilter,
   * Trino's dynamic filters, the reference's SetRDD membership probe all
-  * share this shape; our datalog fixpoint uses the same two kernels at
-  * `Evaluator.bloomPrefilter`).
+  * share this shape).
   *
   * Mechanics: the build keys aggregate into ONE serialized
   * `util.sketch.BloomFilter` via Catalyst's `BloomFilterAggregate` —

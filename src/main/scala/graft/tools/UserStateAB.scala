@@ -1,8 +1,8 @@
 package graft.tools
 import org.apache.spark.sql.SparkSession
 
-/** Ad-hoc warm A/B for the flatMapGroupsWithState gate (the TcNlAB /
-  * BloomAB pattern): 3 same-JVM runs with memo rollback between, plus
+/** Ad-hoc warm A/B for the flatMapGroupsWithState gate (the TcNlAB
+  * pattern): 3 same-JVM runs with memo rollback between, plus
   * per-batch walls — decomposes a suspicious bench reading into
   * first-of-family JIT vs steady state. r13 reading: 9.9s cold-first
   * (batch 1 alone 3.9s of typed-path JIT) vs 2.6-2.9s warm at sf0.1. */

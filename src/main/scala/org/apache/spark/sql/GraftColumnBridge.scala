@@ -32,26 +32,7 @@ object GraftColumnBridge {
     * the caller's layout contract blindly. Returns (df, claimHeld). */
   def checkpointWithPartitioning(
       df: DataFrame, keyCols: Seq[String], numParts: Int): (DataFrame, Boolean, Long) = {
-    val (ds, held, n, _) =
-      checkpointImpl(df, keyCols, numParts, null, null)
-    (ds, held, n)
-  }
-
-  /** `checkpointWithPartitioning` + `xxhash64(full row)` of every
-    * materialized row folded into `hashAcc` during the SAME
-    * materialization pass — fixpoint callers maintain a bloom filter
-    * over the accumulated fact set at zero extra jobs. The hash is the
-    * Catalyst `XxHash64` over ALL output columns in output order (seed
-    * 42), byte-identical to `functions.xxhash64(cols…)` on the probe
-    * side. Accumulator updates merge only from successful tasks and
-    * re-inserting a value is idempotent, so retries/speculation cannot
-    * corrupt the sketch. */
-  def checkpointWithPartitioningHashed(
-      df: DataFrame, keyCols: Seq[String], numParts: Int,
-      hashAcc: org.apache.spark.util.AccumulatorV2[java.lang.Long, _])
-      : (DataFrame, Boolean, Long) = {
-    val (ds, held, n, _) =
-      checkpointImpl(df, keyCols, numParts, null, hashAcc)
+    val (ds, held, n, _) = checkpointImpl(df, keyCols, numParts, null)
     (ds, held, n)
   }
 
@@ -68,19 +49,18 @@ object GraftColumnBridge {
   def checkpointWithPartitioningFlagged(
       df: DataFrame, keyCols: Seq[String], numParts: Int, flagCol: String)
       : (DataFrame, Boolean, Long, Long) =
-    checkpointImpl(df, keyCols, numParts, flagCol, null)
+    checkpointImpl(df, keyCols, numParts, flagCol)
 
   private def checkpointImpl(
-      df: DataFrame, keyCols: Seq[String], numParts: Int, flagCol: String,
-      hashAcc: org.apache.spark.util.AccumulatorV2[java.lang.Long, _])
+      df: DataFrame, keyCols: Seq[String], numParts: Int, flagCol: String)
       : (DataFrame, Boolean, Long, Long) = {
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     val qe = df.queryExecution
     // the flag is read from PHYSICAL rows (qe.toRdd) — resolve its
     // ordinal against the executed plan's output by exprId, with the
     // analyzed position as the fallback (the same discipline as the
-    // hasher below: a physical reordering must not silently read the
-    // wrong column into the convergence count)
+    // partitioning claim below: a physical reordering must not silently
+    // read the wrong column into the convergence count)
     val flagIdx =
       if (flagCol == null) -1
       else {
@@ -96,33 +76,10 @@ object GraftColumnBridge {
     val acc =
       if (flagIdx < 0) None
       else Some(spark.sparkContext.longAccumulator("graft.flaggedRows"))
-    // interpreted XxHash64 bound to the PHYSICAL output (the schema the
-    // rows from toRdd actually carry) — one extra hash per row inside a
-    // pass that already copies every row. Hash order is the ANALYZED
-    // column order (what the probe side's `functions.xxhash64(columns…)`
-    // hashes), resolved into the physical layout by exprId with a
-    // positional fallback — the same discipline as the partitioning
-    // claim below, so a physical reordering can't silently desync the
-    // build and probe hashes into bloom false negatives.
-    val hasher: Option[catalyst.expressions.Expression] =
-      Option(hashAcc).map { _ =>
-        val phys = qe.executedPlan.output
-        val hashOrder = qe.analyzed.output.zipWithIndex.map { case (a, i) =>
-          phys.find(_.exprId == a.exprId).getOrElse(phys(i))
-        }
-        catalyst.expressions.BindReferences.bindReference(
-          new catalyst.expressions.XxHash64(
-            hashOrder: Seq[catalyst.expressions.Expression]),
-          phys)
-      }
-    val rdd = (acc, hasher) match {
-      case (None, None) => qe.toRdd.map(_.copy())
-      case _ => qe.toRdd.map { r =>
-        acc.foreach { a =>
-          if (!r.isNullAt(flagIdx) && r.getBoolean(flagIdx)) a.add(1L)
-        }
-        hasher.foreach(h =>
-          hashAcc.add(Long.box(h.eval(r).asInstanceOf[Long])))
+    val rdd = acc match {
+      case None => qe.toRdd.map(_.copy())
+      case Some(a) => qe.toRdd.map { r =>
+        if (!r.isNullAt(flagIdx) && r.getBoolean(flagIdx)) a.add(1L)
         r.copy()
       }
     }
@@ -212,9 +169,9 @@ object GraftColumnBridge {
   }
 
   /** Render the executed (AQE-final) physical plan as text — for plan
-    * audits (PLANS.md) and specs. Binary literals (a bloom sketch rides
-    * the plan as one) would render as multi-KB hex blobs and bloat every
-    * captured iteration plan — truncate them past 128 hex chars. */
+    * audits (PLANS.md) and specs. Binary literals would render as
+    * multi-KB hex blobs and bloat every captured iteration plan —
+    * truncate them past 128 hex chars. */
   def executedPlanString(df: DataFrame): String =
     "0[xX][0-9A-Fa-f]{128,}".r.replaceAllIn(
       finalPlan(df.queryExecution.executedPlan).toString,
@@ -344,18 +301,16 @@ object GraftColumnBridge {
     *
     * Returns (claimed checkpoint DataFrame over the result, row count,
     * the swapped plan to use as next iteration's template). The result
-    * contract matches `checkpointWithPartitioningHashed`: rows are
-    * copied, localCheckpointed and counted in one pass, with
-    * xxhash64(row) folded into `hashAcc` when non-null; the
-    * partitioning claim is inherited from the template (same physical
-    * plan ⇒ same output layout), with fresh output attrs per slice. */
+    * contract matches `checkpointWithPartitioning`: rows are copied,
+    * localCheckpointed and counted in one pass; the partitioning claim
+    * is inherited from the template (same physical plan ⇒ same output
+    * layout), with fresh output attrs per slice. */
   def reexecuteSwapped(
       plan: execution.SparkPlan,
       analyzedOutput: Seq[catalyst.expressions.Attribute],
       swaps: Seq[(org.apache.spark.rdd.RDD[catalyst.InternalRow],
         org.apache.spark.rdd.RDD[catalyst.InternalRow])],
-      keyCols: Seq[String], numParts: Int, claimHeld: Boolean,
-      hashAcc: org.apache.spark.util.AccumulatorV2[java.lang.Long, _])
+      keyCols: Seq[String], numParts: Int, claimHeld: Boolean)
       : (DataFrame, Long, execution.SparkPlan) = {
     val spark = SparkSession.active.asInstanceOf[classic.SparkSession]
     val swapped = plan.transformUp {
@@ -365,24 +320,7 @@ object GraftColumnBridge {
           case None => r
         }
     }
-    val hasher: Option[catalyst.expressions.Expression] =
-      Option(hashAcc).map { _ =>
-        val phys = swapped.output
-        val hashOrder = analyzedOutput.zipWithIndex.map { case (a, i) =>
-          phys.find(_.exprId == a.exprId).getOrElse(phys(i))
-        }
-        catalyst.expressions.BindReferences.bindReference(
-          new catalyst.expressions.XxHash64(
-            hashOrder: Seq[catalyst.expressions.Expression]),
-          phys)
-      }
-    val rdd = hasher match {
-      case None => swapped.execute().map(_.copy())
-      case Some(h) => swapped.execute().map { r =>
-        hashAcc.add(Long.box(h.eval(r).asInstanceOf[Long]))
-        r.copy()
-      }
-    }
+    val rdd = swapped.execute().map(_.copy())
     rdd.localCheckpoint()
     val n = rdd.count()
     // fresh attrs per slice: downstream unions/joins of slices must not
@@ -430,18 +368,6 @@ object GraftColumnBridge {
       parents.flatMap(p => p.preferredLocations(p.partitions(split.index))).distinct
   }
 
-  /** `might_contain(bloom, hash)` over a driver-held sketch: the
-    * serialized `util.sketch.BloomFilter` rides the plan as a binary
-    * literal (task-binary broadcast — size it via the sketch's
-    * `expectedItems`) and the probe is Catalyst's codegen'd
-    * `BloomFilterMightContain`. `hashCol` must be
-    * `functions.xxhash64(<all columns in build order>)` so probe hashes
-    * match the build side's (`checkpointWithPartitioningHashed`). */
-  def bloomMightContain(bloomBytes: Array[Byte], hashCol: Column): Column =
-    column(catalyst.expressions.BloomFilterMightContain(
-      catalyst.expressions.Literal(bloomBytes, types.BinaryType),
-      expression(hashCol)))
-
   /** Distributed sketch BUILD: Catalyst's `BloomFilterAggregate` as a
     * normal aggregate column — per-partition partial sketches merged by
     * the agg machinery, so the build side never collects to the driver
@@ -452,12 +378,11 @@ object GraftColumnBridge {
     column(new catalyst.expressions.aggregate.BloomFilterAggregate(
       expression(hashCol), expectedItems).toAggregateExpression())
 
-  /** The broadcast-backed variant — the 100 TB shape: a literal sketch
-    * serializes into EVERY task binary (0.9 MB × partitions × engaged
-    * iterations measured ~2.4s of pure task-shipping at sf1.0), while
-    * a broadcast ships once per executor and the expression carries
-    * only the handle. The filter deserializes lazily once per executor
-    * JVM; reads are lock-free. */
+  /** `might_contain(bloom, hash)` over a BROADCAST serialized sketch: a
+    * plan-literal sketch would serialize into EVERY task binary, while a
+    * broadcast ships once per executor and the expression carries only
+    * the handle. The filter deserializes lazily once per executor JVM;
+    * reads are lock-free. */
   def bloomMightContainBroadcast(
       bc: org.apache.spark.broadcast.Broadcast[Array[Byte]],
       hashCol: Column): Column =

@@ -8,13 +8,13 @@ import org.apache.spark.sql.functions.{broadcast, col, lit, max}
   * DatalogQueries.arcDF) at an arbitrary fixture — the PSN twin of
   * ScratchCC10 (judge r17 #4: the 24.5s committed sf10 wall has never
   * been split into iterations vs diff/dedup vs state-scan, and
-  * diffflip/bloom engagement at sf10 is unmeasured).
+  * diffflip engagement at sf10 is unmeasured).
   *
   *   sbt "Test/runMain graft.ScratchTC10 <sfDir> [conf=val ...] [stages]"
   *
   * Trailing key=value args become session confs (so
-  * `spark.datalog.recursion.diffflip=false` / `bloomprefilter=true`
-  * A/B the dedup machinery on the gate-identical shape); `stages`
+  * `spark.datalog.recursion.diffflip=false` / `diffflip=true` A/B the
+  * dedup machinery on the gate-identical shape); `stages`
   * attaches a per-stage listener.
   */
 object ScratchTC10 {
@@ -66,7 +66,7 @@ object ScratchTC10 {
     c.registerTable("arc", step.union(skip))
     val n = c.query("tc(A,B).").count()
     println(f"TC10 total: ${(System.nanoTime() - t0) / 1e9}%.1fs rows=$n sf=$sfDir")
-    println(s"TC10 diffflipSemiBuilds=${c.bloomPrefilterSplits} templateHits=${c.planTemplateHits}")
+    println(s"TC10 templateHits=${c.planTemplateHits}")
     c.iterationStats.foreach { s => println(s"TC10 stat: $s") }
     c.close(); spark.stop()
   }

@@ -206,4 +206,36 @@ class ConfSpec extends AnyFunSuite {
     }
     assert(rows.nonEmpty)
   }
+
+  test("retired bloom pre-filter keys warn once and leave the TC answer unchanged") {
+    val forced = Seq(
+      "spark.datalog.recursion.copartition.enabled" -> "true",
+      "spark.datalog.recursion.diffflip" -> "true",
+      "spark.datalog.recursion.localDeltaRows" -> "0")
+    def tcRows(kvs: (String, String)*): Set[String] = withConf(forced ++ kvs: _*) {
+      val ctx = new DatalogContext(spark)
+      try {
+        ctx.loadProgram(db + tc)
+        ctx.registerData("arc", Fixtures.graph1b)
+        ctx.queryStrings("tc(A,B).").toSet
+      } finally ctx.close()
+    }
+    val expected = tcRows()
+    assert(expected.nonEmpty)
+    for ((k, v) <- Seq(
+        "spark.datalog.recursion.bloomprefilter" -> "true",
+        "spark.datalog.recursion.bloomprefilter.minrows" -> "4",
+        "spark.datalog.recursion.bloomprefilter.expecteditems" -> "1024",
+        "spark.datalog.recursion.bloomprefilter.fpp" -> "0.5")) {
+      val captured = new java.io.ByteArrayOutputStream()
+      val err = System.err
+      System.setErr(new java.io.PrintStream(captured, true))
+      // two queries: the note is printed once, not once per evaluator
+      val rows = try { tcRows(k -> v); tcRows(k -> v) } finally System.setErr(err)
+      val notes = captured.toString.linesIterator.filter(_.contains(s"$k=$v")).toSeq
+      assert(notes.size == 1, s"$k: ${notes.mkString("; ")}")
+      assert(notes.head.contains("retired"), notes.head)
+      assert(rows == expected, s"$k=$v changed the answer")
+    }
+  }
 }

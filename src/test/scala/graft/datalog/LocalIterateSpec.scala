@@ -636,4 +636,66 @@ class LocalIterateSpec extends AnyFunSuite {
       s"expected one folded LocalRelation leaf, got:\n${df.queryExecution.optimizedPlan}")
     ctx.close()
   }
+
+  test("monotonic local paths screen the seed before collecting any static") {
+    // 4 stars of 10 nodes: a 40-row CC seed, over an entry cap of 8
+    val edges = (0 until 4).flatMap(c => (1 until 10).map(i => (c * 10, c * 10 + i)))
+    def run(confs: (String, String)*) = withConf(confs: _*) {
+      val ctx = new DatalogContext(spark)
+      ctx.loadProgram("database({edge(X:integer, Y:integer), node(X:integer)})." +
+        "cc3(X,mmin<X>) <- node(X). cc3(Y,mmin<V>) <- cc3(X,V), edge(X,Y).")
+      ctx.registerData("edge",
+        (edges ++ edges.map(_.swap)).map { case (a, b) => s"$a,$b" })
+      ctx.registerData("node", (0 until 40).map(_.toString))
+      val rows = ctx.queryStrings("cc3(A,B).").toSet
+      (rows, ctx.staticCollectPeakRows,
+        ctx.monotonicLocalRuns + ctx.localIterateMonoRuns)
+    }
+    val (looped, _, loopedRuns) =
+      run("spark.datalog.recursion.monotoniclocal" -> "false")
+    assert(loopedRuns == 0)
+    assert(looped == (0 until 40).map(n => s"[$n,${n / 10 * 10}]").toSet)
+    // driver path: the seed is over autoentries; the task wave: over
+    // autoseedrows. Neither may gather a static row first.
+    for (confs <- Seq(
+        Seq("spark.datalog.recursion.monotoniclocal.autoentries" -> "8"),
+        Seq("spark.datalog.recursion.localiterate" -> "true",
+          "spark.datalog.recursion.localiterate.autoseedrows" -> "8",
+          "spark.datalog.recursion.monotoniclocal.autoentries" -> "8"))) {
+      val (rows, peak, runs) = run(confs: _*)
+      assert(rows == looped, s"$confs")
+      assert(runs == 0, s"$confs: a local path ran over its seed cap")
+      assert(peak == 0, s"$confs: $peak static rows reached the driver")
+    }
+  }
+
+  test("one static collect serves every bound query of a context") {
+    val arcRows = chainArcs(20, 10)
+    def query(ctx: DatalogContext, k: Int) =
+      countJobs(ctx.queryStrings(s"tc($k,B).").toSet)
+    def fresh(k: Int) = {
+      val ctx = new DatalogContext(spark)
+      ctx.loadProgram(db + llTc)
+      ctx.registerData("arc", arcRows)
+      try query(ctx, k) finally ctx.close()
+    }
+    val (fresh1, _) = fresh(1000)
+    val (fresh2, freshJobs) = fresh(5003)
+    val ctx = new DatalogContext(spark)
+    ctx.loadProgram(db + llTc)
+    ctx.registerData("arc", arcRows)
+    try {
+      val (shared1, _) = query(ctx, 1000)
+      val peak = ctx.staticCollectPeakRows
+      val (shared2, sharedJobs) = query(ctx, 5003)
+      assert(shared1 == fresh1 && shared2 == fresh2)
+      assert(fresh2 == (5004 until 5010).map(b => s"[5003,$b]").toSet)
+      assert(ctx.mutualLocalRuns == 2, "both queries should run the set kernel")
+      assert(peak == arcRows.size && ctx.staticCollectPeakRows == peak)
+      // a fresh context counts and collects arc: two jobs the shared
+      // context's second query skips
+      assert(sharedJobs <= freshJobs - 2,
+        s"second query on a shared context: $sharedJobs jobs, fresh: $freshJobs")
+    } finally ctx.close()
+  }
 }

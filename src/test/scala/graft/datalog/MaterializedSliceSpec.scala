@@ -2,14 +2,14 @@ package graft.datalog
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The bloom-broadcast retirement invariant (ADVICE r11): the fixpoint's
-  * finally block destroys every bloom-probe broadcast, which is sound
-  * only because every slice the caller can still evaluate is a
-  * MATERIALIZED plan (checkpointed-RDD / LocalRelation leaves — stored
-  * blocks, no iteration lineage). Slice's constructor now asserts
-  * `Evaluator.materializedPlan`; this spec ties the two ends together:
-  * a bloom-enabled fixpoint's result must stay re-evaluable AFTER its
-  * context is closed and the probe broadcasts are destroyed, and the
+/** The materialized-slice invariant (ADVICE r11): every slice the
+  * caller can still evaluate is a MATERIALIZED plan (checkpointed-RDD /
+  * LocalRelation leaves — stored blocks, no iteration lineage), so a
+  * result never re-runs iterations whose per-loop state (session pins,
+  * retired checkpoints) is gone once the fixpoint returns. Slice's
+  * constructor asserts `Evaluator.materializedPlan`; this spec ties the
+  * two ends together: a forced-diffflip fixpoint's result must stay
+  * re-evaluable after the fixpoint has returned, and the
   * materializedPlan predicate itself must accept exactly the stored-
   * block plan shapes and reject lazy lineage. */
 class MaterializedSliceSpec extends AnyFunSuite {
@@ -41,8 +41,6 @@ class MaterializedSliceSpec extends AnyFunSuite {
     withConf(
       "spark.datalog.recursion.copartition.enabled" -> "true",
       "spark.datalog.recursion.diffflip" -> "true",
-      "spark.datalog.recursion.bloomprefilter" -> "true",
-      "spark.datalog.recursion.bloomprefilter.minrows" -> "4",
       "spark.datalog.recursion.localDeltaRows" -> "0") {
       val ctx = new DatalogContext(spark)
       ctx.loadProgram(
@@ -50,12 +48,10 @@ class MaterializedSliceSpec extends AnyFunSuite {
           "tc(A,B) <- arc(A,B). tc(A,B) <- tc(A,C), arc(C,B).")
       ctx.registerData("arc",
         (0 until 24).map(i => s"$i,${i + 1}") :+ "24,0")
-      // the fixpoint's finally block destroys every bloom-probe
-      // broadcast BEFORE query() returns (logged, not thrown) — so the
-      // very first evaluation below, and any re-evaluation while the
-      // checkpoint blocks live (i.e. until close()), must be a block
-      // replay; a lazy slice would fail here with a destroyed-broadcast
-      // error
+      // the fixpoint's session pins are restored BEFORE query()
+      // returns — so the very first evaluation below, and any
+      // re-evaluation while the checkpoint blocks live (i.e. until
+      // close()), must be a block replay of the same rows
       val df = ctx.query("tc(A,B).")
       val before = df.count()
       assert(before == 25L * 25L)

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rather than once per iteration. Asserts: the template engages on
   * the linear-TC shape (hits > 0), results are identical to the
   * compiled path, localization still happens for tiny tail deltas, and
-  * ineligible shapes (non-linear rules, bloom probe) fall back cleanly
+  * ineligible shapes (non-linear rules) fall back cleanly
   * with identical results. */
 class PlanTemplateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -105,20 +105,6 @@ class PlanTemplateSpec extends AnyFunSuite {
       "spark.datalog.recursion.plantemplate" -> "false")
     assert(hitsOn > 0, "multi-rule template never engaged")
     assert(hitsOff == 0)
-    assert(rowsOn == rowsOff)
-  }
-
-  test("active bloom probe disables the template, results identical") {
-    val confs = Seq(
-      "spark.datalog.recursion.localDeltaRows" -> "0",
-      "spark.datalog.recursion.diffflip" -> "true",
-      "spark.datalog.recursion.bloomprefilter" -> "true")
-    val (rowsOn, hitsOn, _) = run(llTc,
-      confs :+ ("spark.datalog.recursion.plantemplate" -> "true"): _*)
-    val (rowsOff, _, _) = run(llTc,
-      confs :+ ("spark.datalog.recursion.plantemplate" -> "false"): _*)
-    assert(hitsOn == 0,
-      "bloom sketch literal changes every round — must not template")
     assert(rowsOn == rowsOff)
   }
 

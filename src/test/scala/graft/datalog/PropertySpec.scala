@@ -118,6 +118,41 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("TC with a comparison filter agrees with its closure oracle, localiterate on and off") {
+    // a filtered rule keeps the wave's fallback and the looped path on
+    // the same answer: tc(A,B) holds for an arc, or for a tc(A,C) and an
+    // arc(C,B) with B > 2
+    forAllGraphs(4545L) { edges =>
+      var want = edges.toSet
+      var grew = true
+      while (grew) {
+        val next = want ++ (for ((a, c) <- want; (c2, b) <- edges
+          if c == c2 && b > 2) yield (a, b))
+        grew = next.size > want.size
+        want = next
+      }
+      for (li <- Seq("true", "false")) {
+        val keys = Seq("spark.datalog.recursion.localiterate" -> li,
+          "spark.datalog.recursion.localDeltaRows" -> "0")
+        val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+        keys.foreach { case (k, v) => spark.conf.set(k, v) }
+        try {
+          val ctx = new DatalogContext(spark)
+          ctx.loadProgram(
+            "database({arc(X:integer, Y:integer)})." +
+              "tc(A,B) <- arc(A,B). tc(A,B) <- tc(A,C), arc(C,B), B > 2.")
+          ctx.registerData("arc", edges.map { case (a, b) => s"$a,$b" })
+          val got = ctx.query("tc(A,B).").collect()
+            .map(r => (r.getInt(0), r.getInt(1))).toSet
+          assert(got == want, s"localiterate=$li")
+        } finally prev.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      }
+    }
+  }
+
   test("SCC + condensation agree with mutual-reachability oracle on random cyclic digraphs") {
     // scc_id(v) = min over {v} ∪ {u : v ⇄ u}; condensation = quotient
     // edges between distinct components — derived here directly from
