@@ -112,38 +112,17 @@ final case class DatalogConf(
       * local ones — the Spark-native analog of the reference's
       * within-task iteration (FixedPointResultTask.scala:56-103 +
       * BlockManager.replaceLocalBlock). Job count collapses from
-      * O(iterations) to O(1); ineligible programs fall back to the
+      * O(iterations) to O(1); ineligible programs and seeds past the
+      * wave ceiling (4 × `monotoniclocal.autoentries`) fall back to the
       * driver-looped paths silently. */
     localIterate: Boolean = false,
-    /** `spark.datalog.recursion.localiterate.maxstaticrows` (default
-      * 4M): row cap for collecting a static side into the broadcast
-      * multimap; a bigger static side bails back to the looped path
-      * (the probe is a limit(cap+1) job, never an unbounded collect). */
-    localIterateMaxStaticRows: Long = 1L << 22,
-    /** `spark.datalog.recursion.localiterate.autoseedrows` (default
-      * 1M): ECONOMIC seed ceiling for the within-task paths — one task
-      * wave wins below it (the fixpoint is job-latency-bound: dl_tc
-      * sf1, 260k seeds, 3.78s wave vs 4.10s looped) and the looped
-      * Tungsten paths win above it (the per-partition boxed-row
-      * HashSet/HashMap fixpoint measured 3.6× the looped path at
-      * sf10's 2.6M-row seeds: dl_tc 55.0s wave vs 15.3s looped,
-      * dl_apsp 56.1 vs 19.4 — r19 ScaleSweep A/B). A seed past the
-      * ceiling falls back to the looped paths silently, like any other
-      * ineligible shape; the probe is one partial-aggregated count of
-      * the exit plan (no row gather). The ceiling also caps each
-      * COLLECTED STATIC side (min with `maxstaticrows`): past it the
-      * driver collect + multimap build + broadcast dominate any wave
-      * regardless of seed count (a 1-row-seed SSSP behind a 2.6M-row
-      * static collect measured 44.6s vs ~4s looped at sf10). 0
-      * disables the ceiling (always run the wave when otherwise
-      * eligible, memory caps still apply). */
-    localIterateAutoSeedRows: Long = 1L << 20,
     /** `spark.datalog.recursion.supportlocal` (auto|false, default
       * auto): evaluate an mcount/msum support fixpoint entirely on the
       * DRIVER when its seed support and every static relation fit the
-      * local caps (statics ≤1M rows, support ≤2M entries — overflow
-      * bails to the relational loop): support maps and the aggregate
-      * view live in driver memory, rules fire as lowered local steps
+      * local caps (statics ≤1M rows, support ≤
+      * `monotoniclocal.autoentries` entries — overflow bails to the
+      * relational loop): support maps and the aggregate view live in
+      * driver memory, rules fire as lowered local steps
       * from changed groups' aggregate values, aggregates update
       * incrementally — ZERO scheduled jobs per iteration, against the
       * relational loop's full-support merge shuffle + job per
@@ -151,35 +130,23 @@ final case class DatalogConf(
       * non-aggregate paths already get from driver-resident frontiers,
       * extended to support aggregates. */
     supportLocal: String = "auto",
-    /** `spark.datalog.recursion.supportlocal.maxentries` (default
-      * 2M): driver support-map entry ceiling — a mid-loop overflow
-      * bails to the relational path (work is redone there; driver
-      * memory stays bounded). */
-    supportLocalMaxEntries: Long = 1L << 21,
-    /** `spark.datalog.recursion.supportlocal.autoentries` (default
-      * 256k): the ECONOMIC ceiling below the memory one — the same
-      * single-thread-vs-distributed crossover measured for the
-      * monotonic twin (`monotoniclocal.autoentries`). */
-    supportLocalAutoEntries: Long = 1L << 18,
     /** `spark.datalog.recursion.monotoniclocal` (auto|false, default
       * auto): evaluate an mmin/mmax fixpoint entirely on the DRIVER
       * when its seed and every static relation fit the local caps —
       * the `supportlocal` treatment for plain monotonic aggregates:
       * state (group → best value) in driver memory, rules as lowered
-      * local steps, zero scheduled jobs per iteration. Overflow of
-      * `maxentries` bails to the looped paths. */
+      * local steps, zero scheduled jobs per iteration. State growing
+      * past `monotoniclocal.autoentries` bails to the looped paths. */
     monotonicLocal: String = "auto",
-    /** `spark.datalog.recursion.monotoniclocal.maxentries` (default
-      * 2M): driver aggregate-state entry ceiling for the bail. */
-    monotonicLocalMaxEntries: Long = 1L << 21,
     /** `spark.datalog.recursion.monotoniclocal.autoentries` (default
-      * 256k): the ECONOMIC ceiling, below the memory one — the driver
-      * path exists to amortize per-iteration job latency for small
-      * fixpoints, and its single-threaded loop loses to the
-      * distributed merge well before driver memory is at risk (sf1.0
-      * A/B at local[32]: 150k-entry CC driver 4.8s vs looped 6.1s;
-      * 1.1M-entry APSP driver 13.4s vs looped 6.8s). State growing
-      * past min(autoentries, maxentries) bails to the looped paths. */
+      * 256k), E: the one cap of every in-JVM fixpoint path. The
+      * driver-resident monotonic, mutual/handoff and support paths
+      * bail when their seed or state passes E; the localiterate task
+      * waves bail when their seed passes 4E. Each is an ECONOMIC
+      * ceiling — the single-threaded boxed-row loops lose to the
+      * distributed ones well before memory is at risk (sf1.0 A/B at
+      * local[32]: 150k-entry CC driver 4.8s vs looped 6.1s, 1.1M-entry
+      * APSP driver 13.4s vs looped 6.8s). See `Evaluator`'s cap rule. */
     monotonicLocalAutoEntries: Long = 1L << 18,
     /** `spark.datalog.recursion.mutuallocal` (auto|false, default
       * auto): evaluate a MUTUAL (multi-predicate) semi-naive clique
@@ -190,8 +157,8 @@ final case class DatalogConf(
       * job scheduling per iteration on an 8-row answer). Fact sets
       * live in driver hash sets, rules fire as lowered local steps
       * from the frontier; overflow of the shared
-      * `monotoniclocal.maxentries`/`autoentries` caps bails to the
-      * looped round-robin. Also covers linear SINGLE-predicate cliques
+      * `monotoniclocal.autoentries` cap bails to the looped
+      * round-robin. Also covers linear SINGLE-predicate cliques
       * whose iteration-0 seed slice localized (`localDeltaRows` /
       * `localDeltaBytes`): the loop hands the driver-resident seed rows
       * to the same kernel, and an ineligible shape, a type mismatch or
@@ -382,19 +349,29 @@ object DatalogConf {
         "static join sides are persisted on first use across iterations " +
         "(spark.datalog.storage.level controls the level)"
     }
-    for (k <- retiredKeys; v <- spark.conf.getOption(k))
-      notes += s"$k=$v ignored: retired (the membership pre-filter on the " +
-        "diffflip set difference measured at parity with the flip alone)"
+    for ((k, why) <- retiredKeys; v <- spark.conf.getOption(k))
+      notes += s"$k=$v ignored: retired ($why)"
     notes.result()
   }
 
-  /** Native keys of removed engine arms: accepted, warned about once,
-    * and without effect. */
-  private val retiredKeys: Seq[String] = Seq(
-    "spark.datalog.recursion.bloomprefilter",
-    "spark.datalog.recursion.bloomprefilter.minrows",
-    "spark.datalog.recursion.bloomprefilter.expecteditems",
-    "spark.datalog.recursion.bloomprefilter.fpp")
+  /** Native keys of removed engine arms and caps, each with the reason
+    * it went: accepted, warned about once, and without effect. */
+  private val retiredKeys: Seq[(String, String)] = {
+    val bloom = "the membership pre-filter on the diffflip set " +
+      "difference measured at parity with the flip alone"
+    val cap = "every in-JVM fixpoint path takes its caps from " +
+      "spark.datalog.recursion.monotoniclocal.autoentries"
+    Seq(
+      "spark.datalog.recursion.bloomprefilter" -> bloom,
+      "spark.datalog.recursion.bloomprefilter.minrows" -> bloom,
+      "spark.datalog.recursion.bloomprefilter.expecteditems" -> bloom,
+      "spark.datalog.recursion.bloomprefilter.fpp" -> bloom,
+      "spark.datalog.recursion.monotoniclocal.maxentries" -> cap,
+      "spark.datalog.recursion.supportlocal.maxentries" -> cap,
+      "spark.datalog.recursion.supportlocal.autoentries" -> cap,
+      "spark.datalog.recursion.localiterate.maxstaticrows" -> cap,
+      "spark.datalog.recursion.localiterate.autoseedrows" -> cap)
+  }
 
   private val warned = scala.collection.concurrent.TrieMap[String, Unit]()
   private def warnOnce(msg: String): Unit =
@@ -455,12 +432,6 @@ object DatalogConf {
           .getOption("spark.datalog.recursion.iterateinfixedpointresulttask")
           .filter(v => Set("true", "false")(v.trim.toLowerCase)))
         .getOrElse("false").trim.toBoolean,
-    localIterateMaxStaticRows =
-      spark.conf.get("spark.datalog.recursion.localiterate.maxstaticrows",
-        (1L << 22).toString).toLong,
-    localIterateAutoSeedRows =
-      spark.conf.get("spark.datalog.recursion.localiterate.autoseedrows",
-        (1L << 20).toString).toLong,
     supportLocal = {
       val v = spark.conf.get("spark.datalog.recursion.supportlocal", "auto")
         .trim.toLowerCase
@@ -468,12 +439,6 @@ object DatalogConf {
         s"spark.datalog.recursion.supportlocal must be auto|false, got '$v'")
       v
     },
-    supportLocalMaxEntries =
-      spark.conf.get("spark.datalog.recursion.supportlocal.maxentries",
-        (1L << 21).toString).toLong,
-    supportLocalAutoEntries =
-      spark.conf.get("spark.datalog.recursion.supportlocal.autoentries",
-        (1L << 18).toString).toLong,
     monotonicLocal = {
       val v = spark.conf.get("spark.datalog.recursion.monotoniclocal", "auto")
         .trim.toLowerCase
@@ -481,9 +446,6 @@ object DatalogConf {
         s"spark.datalog.recursion.monotoniclocal must be auto|false, got '$v'")
       v
     },
-    monotonicLocalMaxEntries =
-      spark.conf.get("spark.datalog.recursion.monotoniclocal.maxentries",
-        (1L << 21).toString).toLong,
     monotonicLocalAutoEntries =
       spark.conf.get("spark.datalog.recursion.monotoniclocal.autoentries",
         (1L << 18).toString).toLong,

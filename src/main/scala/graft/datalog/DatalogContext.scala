@@ -271,6 +271,11 @@ final class DatalogContext(val spark: SparkSession) {
   def staticCollectPeakRows: Long =
     evaluator.map(_.staticCollectPeakRows).getOrElse(0L)
 
+  /** Static indexes the local fixpoint paths built so far (spec hook:
+    * one per static, equalities and key positions per evaluator). */
+  private[datalog] def staticIndexBuilds: Int =
+    evaluator.map(_.staticIndexBuilds).getOrElse(0)
+
   def monotonicFragmentRuns: Int =
     evaluator.map(_.monotonicFragmentRuns).getOrElse(0)
 

@@ -312,6 +312,7 @@ final class Evaluator(
     memo.clear()
     boundMemo.clear()
     staticRowsCache.clear()
+    staticIndexCache.clear()
   }
 
   /** Session confs pinned for the span of one fixpoint loop: `pin`
@@ -355,7 +356,7 @@ final class Evaluator(
     val rowBytes =
       df.schema.fields.map(_.dataType.defaultSize.toLong).sum.max(1L)
     math.min(conf.localDeltaRows, conf.localDeltaBytes / rowBytes)
-      .min(1L << 24).max(0L).toInt
+      .min(Evaluator.MaxCollectRows).max(0L).toInt
   }
 
   /** Collect at most `cap` rows, probed via a limit(cap+1) job — never
@@ -370,6 +371,32 @@ final class Evaluator(
     val probe = df.limit(cap + 1).collect()
     if (probe.length > cap) None else Some(probe)
   }
+
+  // ---- the one cap rule of the in-JVM fixpoint paths
+  //
+  // E = `spark.datalog.recursion.monotoniclocal.autoentries` (default
+  // 256k). The driver-resident paths — monotonic, mutual and the
+  // single-predicate handoff, support — run only while their seed and
+  // state stay at or under E; the localiterate task waves only when
+  // their seed is at most 4E; every static either path collects holds
+  // at most `Evaluator.LocalStaticRows` (1M) rows. Each ceiling is
+  // ECONOMIC: past it the single-threaded boxed-row loops lose to the
+  // looped Tungsten paths well before memory is at risk (sf1.0 A/B:
+  // 1.1M-entry APSP driver 13.4s vs looped 6.8s; sf10: a 2.6M-row dl_tc
+  // seed wave 55.0s vs looped 15.3s, a 1-row SSSP seed behind a
+  // 2.6M-row static collect 44.6s vs ~4s looped).
+
+  /** E: the driver-resident seed and state ceiling. */
+  private def localEntryCap: Long = conf.monotonicLocalAutoEntries
+
+  /** The localiterate task waves' seed ceiling: 4E. */
+  private def waveSeedCap: Long = localEntryCap.min(Long.MaxValue / 4) * 4
+
+  /** A driver-resident seed: all its rows when there are at most E, by
+    * a capped collect; None otherwise. */
+  private def collectLocalSeed(df: DataFrame)
+      : Option[Array[org.apache.spark.sql.Row]] =
+    collectCapped(df, localEntryCap.min(Evaluator.MaxCollectRows).toInt)
 
   /** All semi-naive contributions of one rule this iteration. When the
     * rule touches a CLAIMED static (see claimBigStatics), the delta
@@ -582,10 +609,11 @@ final class Evaluator(
     * lands in the partition that derived it — the global fixpoint is
     * the disjoint union of the local ones, one job wave for the whole
     * recursion instead of one per iteration. The rules lower through
-    * `lowerSetRule`, the driver-resident set kernel's lowering.
-    * Returns None (caller falls back to the looped paths) on any
-    * ineligible shape, non-value-comparable or mismatched column types,
-    * or a static side past the collect cap. */
+    * `lowerSetRule` and run the set kernel (`Evaluator.setFixpoint`),
+    * as on the driver. Returns None (caller falls back to the looped
+    * paths) on any ineligible shape, non-value-comparable or mismatched
+    * column types, a seed past the wave ceiling or a static side past
+    * the collect cap. */
   private def localIterate(
       clique: Analysis#Clique,
       p: String,
@@ -616,23 +644,12 @@ final class Evaluator(
     // job-free shape pass first (ADVICE r19): ineligible rule shapes
     // bail before the seed-count probe or any static collect runs
     if (recRules.exists(r => lower(r, noStatics).isEmpty)) return None
-    // Economic seed ceiling (r19): the one-wave fixpoint is a
-    // per-partition boxed-row HashSet loop — it wins when the fixpoint
-    // is job-latency-bound (small seeds) and loses 3.6× to the looped
-    // Tungsten paths at sf10's 2.6M-row seeds (dl_tc 55.0s wave vs
-    // 15.3s looped — ScaleSweep A/B). The probe is one
+    // the wave seed ceiling (4E, see the cap rule): one
     // partial-aggregated count of the exit plan, before any static
     // collect; an over-ceiling seed falls back silently like any
-    // ineligible shape.
-    if (conf.localIterateAutoSeedRows > 0 &&
-        seeded.count() > conf.localIterateAutoSeedRows) return None
-    // The ECONOMIC ceiling applies to the static collects too: a
-    // static past it makes the driver collect + multimap build +
-    // broadcast the dominant bill regardless of seed count
-    // (dl_sssp_localiter sf10: a 1-row seed behind a 2.6M-row static
-    // collect measured 44.6s vs ~4s looped/fragment).
-    val staticRows = staticRowsUpTo(localIterateStaticCap)
-    val rules = recRules.map(r => lower(r, staticRows).getOrElse(return None))
+    // ineligible shape
+    if (seeded.count() > waveSeedCap) return None
+    val rules = recRules.map(r => lower(r, localStatics).getOrElse(return None))
 
     // ---- one task wave: pivot-partitioned seed, local fixpoints
     localIterateRuns += 1
@@ -641,19 +658,13 @@ final class Evaluator(
       if (pvCols.isEmpty) seeded
       else seeded.repartition(nParts, pvCols.map(seeded.col): _*)
     val bc = spark.sparkContext.broadcast(rules.toIndexedSeq)
-    val out = seedPart.mapPartitions(Evaluator.setPartitionFixpoint(bc))(
+    val out = seedPart.mapPartitions(
+      Evaluator.setWave(bc, p, maxIterations))(
       org.apache.spark.sql.Encoders.row(schema))
 
     val (res, _) = materialize(out.toDF())
     Some(res)
   }
-
-  /** Static-collect ceiling of the task-wave paths: `maxstaticrows`,
-    * lowered to the economic `autoseedrows` ceiling when one is set. */
-  private def localIterateStaticCap: Long =
-    if (conf.localIterateAutoSeedRows > 0)
-      conf.localIterateMaxStaticRows.min(conf.localIterateAutoSeedRows)
-    else conf.localIterateMaxStaticRows
 
   /** Counts of monotonic within-task fixpoints run (spec hook). */
   var localIterateMonoRuns: Int = 0
@@ -702,47 +713,49 @@ final class Evaluator(
   var staticCollectPeakRows: Long = 0L
 
   /** Static relations collected by the local fixpoint paths, keyed by
-    * (pred, within-atom equalities): `Right(rows)` is the complete
-    * null-free row set, `Left(n)` the verdict that the relation holds
-    * more than `n` rows (`Long.MaxValue` when it holds a null, which no
-    * cap admits). One collect serves every rule, atom and query of this
+    * (pred, within-atom equalities): the complete null-free row set, or
+    * None when the relation holds more than `LocalStaticRows` rows or a
+    * null. One collect serves every rule, atom and query of this
     * evaluator; the evaluator is rebuilt whenever the program or a
     * relation changes, and close() clears it. */
-  private val staticRowsCache = mutable.Map[(String, Seq[(Int, Int)]),
-    Either[Long, IndexedSeq[IndexedSeq[Any]]]]()
+  private val staticRowsCache =
+    mutable.Map[(String, Seq[(Int, Int)]), Option[IndexedSeq[IndexedSeq[Any]]]]()
 
-  /** Static rows by (pred, within-atom equalities), as the local
-    * lowerings consume them; None rejects the lowering. */
+  /** A static relation's rows indexed on key positions: key → rows. */
+  private type StaticIndex = Map[Seq[Any], IndexedSeq[IndexedSeq[Any]]]
+
+  /** The indexes over `staticRowsCache` rows, keyed by (pred,
+    * within-atom equalities, key positions): built once per evaluator,
+    * so repeated lowerings (every bound query) reuse them. */
+  private val staticIndexCache =
+    mutable.Map[(String, Seq[(Int, Int)], Seq[Int]), StaticIndex]()
+
+  /** Count of static indexes built (spec hook). */
+  private[datalog] var staticIndexBuilds: Int = 0
+
+  /** Static lookups as the local lowerings consume them: (pred,
+    * within-atom equalities, key positions) → the index; None rejects
+    * the lowering. */
   private type StaticRows =
-    (String, Seq[(Int, Int)]) => Option[IndexedSeq[IndexedSeq[Any]]]
+    (String, Seq[(Int, Int)], Seq[Int]) => Option[StaticIndex]
 
   /** Every static empty: lowers a rule's shape without running a job. */
-  private val noStatics: StaticRows = (_, _) => Some(IndexedSeq.empty)
+  private val noStatics: StaticRows = (_, _, _) => Some(Map.empty)
 
-  /** Capped static-relation lookup for the local fixpoint paths: the
-    * rows when the relation has at most `maxRows` rows, else None. A
-    * static over the cap is rejected before any row is gathered: by its
+  /** Capped static lookups for the local fixpoint paths. A static over
+    * `LocalStaticRows` is rejected before any row is gathered: by its
     * row count when the plan statistics know it (a loaded cache, a
-    * LocalRelation, a range), else by one count job. An over-cap
-    * verdict taken at a smaller cap is re-checked at this one. */
-  private def staticRowsUpTo(maxRows: Long): StaticRows = {
-    val cap = maxRows.min(1L << 24)
-    (pred, eqs) => {
-      val entry = staticRowsCache.get((pred, eqs)) match {
-        case Some(Left(over)) if over < cap => collectStatic(pred, eqs, cap)
-        case Some(e) => e
-        case None => collectStatic(pred, eqs, cap)
-      }
-      staticRowsCache((pred, eqs)) = entry
-      entry match {
-        case Right(rows) if rows.length <= cap => Some(rows)
-        case _ => None
-      }
-    }
-  }
+    * LocalRelation, a range), else by one count job. */
+  private val localStatics: StaticRows = (pred, eqs, keyPos) =>
+    staticRowsCache.getOrElseUpdate((pred, eqs), collectStatic(pred, eqs))
+      .map(rows => staticIndexCache.getOrElseUpdate((pred, eqs, keyPos), {
+        staticIndexBuilds += 1
+        rows.groupBy(row => keyPos.map(row))
+      }))
 
-  private def collectStatic(pred: String, eqs: Seq[(Int, Int)], cap: Long)
-      : Either[Long, IndexedSeq[IndexedSeq[Any]]] = {
+  private def collectStatic(pred: String, eqs: Seq[(Int, Int)])
+      : Option[IndexedSeq[IndexedSeq[Any]]] = {
+    val cap = Evaluator.LocalStaticRows
     // predDF, not cachedStatic: these paths read the static exactly
     // once (the collect below) — persisting it would pin dead blocks
     // until close(); a bail to a looped path re-persists through that
@@ -761,14 +774,14 @@ final class Evaluator(
       case Some(_) if eqs.isEmpty => true
       case _ => df.queryExecution.toRdd.count() > cap
     }
-    if (overCap) Left(cap)
+    if (overCap) None
     else {
       val rows = df.collect()
       staticCollectPeakRows = staticCollectPeakRows.max(rows.length.toLong)
       // null-free contract: the lowered probes/filters use plain
       // equality and unboxed compares — a null row bails the path
-      if (rows.exists(_.anyNull)) Left(Long.MaxValue)
-      else Right(rows.iterator.map(r => r.toSeq.toIndexedSeq).toIndexedSeq)
+      if (rows.exists(_.anyNull)) None
+      else Some(rows.iterator.map(r => r.toSeq.toIndexedSeq).toIndexedSeq)
     }
   }
 
@@ -908,8 +921,8 @@ final class Evaluator(
               }
           }
         }
-        val rows = staticRows(a.pred, eqs.toSeq).getOrElse(return None)
-        val table = rows.groupBy(row => keyPos.toSeq.map(row): Seq[Any])
+        val table =
+          staticRows(a.pred, eqs.toSeq, keyPos.toSeq).getOrElse(return None)
         steps += MonoProbe(TaskStep(keyEnv.toSeq, binds.toSeq, table))
       case Comparison("=", TermExpr(Variable(n)), rhs) if !slot.contains(n) =>
         val (ex, dt) = lower(rhs).getOrElse(return None)
@@ -969,33 +982,6 @@ final class Evaluator(
       envType.length, steps, head))
   }
 
-  /** Within-task local fixpoint for MONOTONIC (mmin/mmax) cliques — the
-    * aggregate half of the reference's within-task iteration
-    * (FixedPointResultTask.scala:56-103, iterating AggregateSetRDD
-    * state in-task): eligible when every recursive rule joins ONE
-    * recursive atom (plain distinct vars, one per predicate column)
-    * with broadcastable static atoms plus int/long `+ - *` assignments
-    * and comparison filters, and the head groups plain bound vars
-    * around a single mmin/mmax of a bound var.
-    *
-    * Unlike the non-aggregate localiterate this needs NO pivot
-    * closure: min/max distribute over unions of derivation sets, and
-    * every derivation chain is rooted at exactly one seed fact — so
-    * each partition runs a complete local value-improving fixpoint
-    * from ITS seed facts (a multi-source Bellman-Ford over the
-    * broadcast statics, pruned by a local best-value map; pruning
-    * dominated values is sound for exactly the reason the looped
-    * monotonic path's improved-only delta is: mmin/mmax recursion
-    * presumes rules monotone in the recursive value), and ONE global
-    * min/max re-aggregation merges the per-partition maps. One task
-    * wave + one agg shuffle replaces O(iterations) scheduled jobs.
-    * Memory: a task's best map covers the groups REACHABLE from its
-    * seeds — for multi-column groups (APSP-shape) that is
-    * O(task's seed sources × reachable nodes), which the static
-    * collect cap does NOT bound; the conf is opt-in for exactly this
-    * reason (size the partition count so each task's share fits).
-    * Returns None on any ineligible shape — the caller falls back to
-    * the looped monotonic paths. */
   /** Shared prologue of the task-local and driver-local monotonic
     * paths: compile + widen the seed, check the schema and aggregate
     * type, and screen every recursive rule's shape against empty
@@ -1075,97 +1061,35 @@ final class Evaluator(
     * job-latency-bound, not shuffle-bound. Improved values are visible
     * within the round (Gauss-Seidel); the inflationary min/max-merge
     * fixpoint is schedule-independent, so this converges to the looped
-    * paths' exact state. A mid-loop overflow of
-    * `monotoniclocal.maxentries` bails to the looped paths (work is
-    * redone there; driver memory stays bounded). */
+    * paths' exact state. A seed or state past the cap rule's E bails
+    * to the looped paths (work is redone there; driver memory stays
+    * bounded). */
   private def driverMonotonicFixpoint(
       clique: Analysis#Clique,
       p: String,
       isMin: Boolean,
       aggIdx: Int): Option[DataFrame] = {
-    import Evaluator._
     val spark = org.apache.spark.sql.SparkSession.active
     val (seed, schema, aggLong, lowerRules) =
       lowerMonotonicClique(clique, p, aggIdx).getOrElse(return None)
-    // two ceilings: autoentries is the ECONOMIC one (the single-thread
-    // driver loop loses to the distributed merge well before driver
-    // memory is at risk — sf1.0 A/B: 1.1M-entry APSP 13.4s driver vs
-    // 6.8s looped, 150k-entry CC 4.8s vs 6.1s), maxentries the memory
-    // backstop
-    val cap = conf.monotonicLocalMaxEntries.min(conf.monotonicLocalAutoEntries)
-    val seedRows =
-      collectCapped(seed, cap.min(1L << 24).toInt).getOrElse(return None)
+    val seedRows = collectLocalSeed(seed).getOrElse(return None)
     // the looped paths' min/max IGNORE null values; the local compare
     // cannot — bail to them on any null (user-registered EDBs only:
     // Datalog-source tuples are non-null)
     if (seedRows.exists(_.anyNull)) return None
-    // statics only once the seed fits (≤ 1M rows each)
-    val rules = lowerRules(staticRowsUpTo(1L << 20)).getOrElse(return None)
+    // statics only once the seed fits
+    val rules = lowerRules(localStatics).getOrElse(return None)
 
     monotonicLocalRuns += 1
-    val groupIdxs = schema.indices.filterNot(_ == aggIdx).toIndexedSeq
-    val posToGroup = schema.indices.map(i => groupIdxs.indexOf(i))
-    def better(a: Any, b: Any): Boolean = {
-      val c =
-        if (aggLong) java.lang.Long.compare(
-          a.asInstanceOf[Long], b.asInstanceOf[Long])
-        else java.lang.Integer.compare(
-          a.asInstanceOf[Int], b.asInstanceOf[Int])
-      if (isMin) c < 0 else c > 0
-    }
-    val best = mutable.HashMap[IndexedSeq[Any], Any]()
-    var dirty = mutable.LinkedHashSet[IndexedSeq[Any]]()
-    var overCap = false
-    def offer(g: IndexedSeq[Any], v: Any): Unit =
-      best.get(g) match {
-        case Some(old) if !better(v, old) => ()
-        case _ =>
-          best(g) = v; dirty += g
-          // checked on EVERY insert: a single hub-heavy round must not
-          // outgrow driver memory before a round-boundary check
-          if (best.size > cap) overCap = true
-      }
-    seedRows.foreach { r =>
-      val s = r.toSeq.toIndexedSeq
-      offer(groupIdxs.map(s), s(aggIdx))
-    }
-
-    var frontier = dirty
-    var rounds = 0
-    while (frontier.nonEmpty && !overCap) {
-      rounds += 1
-      if (rounds > maxIterations)
-        throw new EvalException(
-          s"aggregate fixpoint exceeded $maxIterations iterations")
-      dirty = mutable.LinkedHashSet[IndexedSeq[Any]]()
-      val statT0 = System.nanoTime()
-      val it = frontier.iterator
-      while (it.hasNext && !overCap) {
-        val g = it.next()
-        // current value at fire time: a same-round improvement simply
-        // re-marks the group and refires next round
-        val v = best(g)
-        rules.foreach { mr =>
-          val env = new Array[Any](mr.envSize)
-          var i = 0
-          while (i < schema.length) {
-            env(i) = if (i == aggIdx) v else g(posToGroup(i))
-            i += 1
-          }
-          Evaluator.runMonoSteps(mr.steps, env,
-            () => offer(mr.group.map(env), env(mr.aggSlot)))
-        }
-      }
-      recordStat(p, rounds, best.size.toLong, statT0)
-      frontier = dirty
-    }
-    if (overCap) return None
+    val shape = Evaluator.BestValueShape(schema.length, aggIdx, aggLong, isMin)
+    val best = Evaluator.bestValueFixpoint(rules, shape, seedRows.iterator,
+      localEntryCap, maxIterations,
+      (round, size, t0) => recordStat(p, round, size.toLong, t0))
+      .getOrElse(return None)
 
     import scala.jdk.CollectionConverters._
-    val outRows = best.iterator.map { case (g, v) =>
-      org.apache.spark.sql.Row.fromSeq(schema.indices.map(i =>
-        if (i == aggIdx) v else g(posToGroup(i))))
-    }.toSeq
+    val outRows = best.entrySet.iterator.asScala
+      .map(e => shape.row(e.getKey, e.getValue)).toIndexedSeq
     Some(spark.createDataFrame(outRows.asJava, schema))
   }
 
@@ -1197,8 +1121,8 @@ final class Evaluator(
     * jobs: one narrow collect per seed (none for a LocalRelation seed)
     * plus one collect per static relation per evaluator — ZERO per
     * iteration. `seedsDf` already carries any bound-query filter.
-    * Overflow of the shared monotoniclocal entry caps, or a static
-    * past 1M rows, bails to the looped paths (work is redone there;
+    * Seeds or facts past the cap rule's E, or a static past
+    * `LocalStaticRows`, bail to the looped paths (work is redone there;
     * driver memory stays bounded).
     *
     * Reference semantics: MutualRecursion.scala:28-131 (round-robin
@@ -1207,7 +1131,6 @@ final class Evaluator(
       clique: Analysis#Clique,
       seedsDf: Map[String, DataFrame])
       : Option[Map[String, DataFrame]] = {
-    import Evaluator._
     val spark = org.apache.spark.sql.SparkSession.active
     val preds = clique.preds.toSeq.sorted
     if (seedsDf.isEmpty) return None // empty fixpoint — looped path's job
@@ -1238,89 +1161,67 @@ final class Evaluator(
     if (!preds.forall(q =>
         schemas(q).forall(f => valueComparable(f.dataType)))) return None
 
-    // ---- lower every member's recursive rules (statics ≤ 1M rows,
-    // the driverMonotonicFixpoint cap); non-linear rules bail
-    def lowerAll(staticRows: StaticRows): Option[Seq[MutualRule]] =
+    // ---- lower every member's recursive rules; non-linear rules bail
+    def lowerAll(staticRows: StaticRows): Option[Seq[Evaluator.MutualRule]] =
       Some(for (p <- preds; r <- clique.recursiveRules(p))
         yield lowerSetRule(clique, r, p, schemas, staticRows)
           .getOrElse(return None))
     // shape screen against empty statics: no job before the shape is known
     if (lowerAll(noStatics).isEmpty) return None
 
-    // ---- seeds under the shared entry caps (economic ceiling below
-    // the memory one, as monotoniclocal: the single-thread driver loop
-    // loses to the distributed round-robin well before driver memory
-    // is at risk)
-    val cap = conf.monotonicLocalMaxEntries
-      .min(conf.monotonicLocalAutoEntries).min(1L << 24).toInt
-    val seedRows = mutable.Map[String, Array[org.apache.spark.sql.Row]]()
-    for ((q, df) <- seedsDf) {
-      val rows = collectCapped(df, cap).getOrElse(return None)
+    // ---- seeds under the cap rule's E, then the statics
+    val seedRows = seedsDf.map { case (q, df) =>
+      val rows = collectLocalSeed(df).getOrElse(return None)
       // null-free contract: the lowered probes use plain equality
       if (rows.exists(_.anyNull)) return None
-      seedRows(q) = rows
+      q -> rows
     }
-    val lowered = lowerAll(staticRowsUpTo(1L << 20)).getOrElse(return None)
+    val lowered = lowerAll(localStatics).getOrElse(return None)
 
     mutualLocalRuns += 1
-    val facts = preds.map(q =>
-      q -> new java.util.HashSet[IndexedSeq[Any]]()).toMap
-    var frontier = mutable.Map[String, mutable.ArrayBuffer[IndexedSeq[Any]]]()
-    var total = 0L
-    var overCap = false
-    for (q <- preds; rows <- seedRows.get(q)) {
-      val buf = mutable.ArrayBuffer[IndexedSeq[Any]]()
-      rows.foreach { r =>
-        val v = r.toSeq.toIndexedSeq
-        if (facts(q).add(v)) { buf += v; total += 1 }
-      }
-      if (buf.nonEmpty) frontier(q) = buf
-    }
-    if (total > cap) return None
-    val byRec = lowered.groupBy(_.recPred)
-    var rounds = 0
-    while (frontier.nonEmpty && !overCap) {
-      rounds += 1
-      if (rounds > maxIterations)
-        throw new EvalException(
-          s"fixpoint exceeded $maxIterations iterations")
-      val statT0 = System.nanoTime()
-      val next = mutable.Map[String, mutable.ArrayBuffer[IndexedSeq[Any]]]()
-      for ((q, rows) <- frontier; rule <- byRec.getOrElse(q, Nil)) {
-        var i = 0
-        while (i < rows.length && !overCap) {
-          val row = rows(i)
-          val env = new Array[Any](rule.envSize)
-          var k = 0
-          while (k < rule.recArity) { env(k) = row(k); k += 1 }
-          runMonoSteps(rule.steps, env, () => {
-            val d: IndexedSeq[Any] = rule.head.map(env)
-            if (facts(rule.headPred).add(d)) {
-              next.getOrElseUpdate(rule.headPred,
-                mutable.ArrayBuffer[IndexedSeq[Any]]()) += d
-              total += 1
-              if (total > cap) overCap = true
-            }
-          })
-          i += 1
-        }
-      }
-      next.foreach { case (p2, buf) =>
-        recordStat(p2, rounds, buf.size.toLong, statT0) }
-      frontier = next
-    }
-    if (overCap) return None // bail: looped paths redo the work bounded
+    val facts = Evaluator.setFixpoint(lowered.toIndexedSeq,
+      preds.flatMap(q => seedRows.get(q).map(rows => q -> rows.iterator)),
+      localEntryCap, maxIterations,
+      (round, q, n, t0) => recordStat(q, round, n.toLong, t0))
+      .getOrElse(return None) // bail: looped paths redo the work bounded
 
     import scala.jdk.CollectionConverters._
     Some(preds.map { q =>
       val rows: java.util.List[org.apache.spark.sql.Row] =
-        facts(q).iterator.asScala
+        facts.get(q).iterator.flatMap(_.iterator.asScala)
           .map(v => org.apache.spark.sql.Row.fromSeq(v))
           .toIndexedSeq.asJava
       q -> spark.createDataFrame(rows, schemas(q))
     }.toMap)
   }
 
+  /** Within-task local fixpoint for MONOTONIC (mmin/mmax) cliques — the
+    * aggregate half of the reference's within-task iteration
+    * (FixedPointResultTask.scala:56-103, iterating AggregateSetRDD
+    * state in-task): eligible when every recursive rule joins ONE
+    * recursive atom (plain distinct vars, one per predicate column)
+    * with broadcastable static atoms plus int/long `+ - *` assignments
+    * and comparison filters, and the head groups plain bound vars
+    * around a single mmin/mmax of a bound var.
+    *
+    * Unlike the non-aggregate localiterate this needs NO pivot
+    * closure: min/max distribute over unions of derivation sets, and
+    * every derivation chain is rooted at exactly one seed fact — so
+    * each partition runs a complete local value-improving fixpoint
+    * from ITS seed facts (a multi-source Bellman-Ford over the
+    * broadcast statics, pruned by a local best-value map; pruning
+    * dominated values is sound for exactly the reason the looped
+    * monotonic path's improved-only delta is: mmin/mmax recursion
+    * presumes rules monotone in the recursive value), and ONE global
+    * min/max re-aggregation merges the per-partition maps. One task
+    * wave + one agg shuffle replaces O(iterations) scheduled jobs.
+    * Memory: a task's best map covers the groups REACHABLE from its
+    * seeds — for multi-column groups (APSP-shape) that is
+    * O(task's seed sources × reachable nodes), which the static
+    * collect cap does NOT bound; the conf is opt-in for exactly this
+    * reason (size the partition count so each task's share fits).
+    * Returns None on any ineligible shape — the caller falls back to
+    * the looped monotonic paths. */
   private def localIterateMonotonic(
       clique: Analysis#Clique,
       p: String,
@@ -1331,37 +1232,28 @@ final class Evaluator(
     val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     val (seed, schema, aggLong, lowerRules) =
       lowerMonotonicClique(clique, p, aggIdx).getOrElse(return None)
-    // economic seed ceiling — see localIterate (the monotonic wave's
-    // per-partition HashMap fixpoint has the same boxed-row economics:
-    // dl_apsp sf10 A/B 56.1s wave vs 19.4s looped). Checked after the
-    // job-free shape screen and before any static collect, under the
-    // same economic static ceiling as localIterate.
-    if (conf.localIterateAutoSeedRows > 0 &&
-        seed.count() > conf.localIterateAutoSeedRows) return None
-    val rules = lowerRules(staticRowsUpTo(localIterateStaticCap))
-      .getOrElse(return None)
+    // the wave seed ceiling (4E) — see localIterate: the monotonic
+    // wave's per-partition best-value loop has the same boxed-row
+    // economics (dl_apsp sf10 A/B 56.1s wave vs 19.4s looped). Checked
+    // after the job-free shape screen and before any static collect.
+    if (seed.count() > waveSeedCap) return None
+    val rules = lowerRules(localStatics).getOrElse(return None)
 
     // ---- one task wave of local value-improving fixpoints
     localIterateMonoRuns += 1
-    val groupIdxs = schema.indices.filterNot(_ == aggIdx).toIndexedSeq
     // seeds sharing the leading group column co-locate (same-group
     // derivation trees never split across tasks, so no duplicated
     // exploration for same-source seeds); the distribution across
     // tasks is otherwise free — no closure requirement
-    val seedPart =
-      if (groupIdxs.nonEmpty)
-        seed.repartition(nParts, seed(schema(groupIdxs.head).name))
-      else seed.repartition(nParts)
+    val lead = schema.indices.find(_ != aggIdx)
+    val seedPart = lead match {
+      case Some(i) => seed.repartition(nParts, seed(schema(i).name))
+      case None => seed.repartition(nParts)
+    }
     val bc = spark.sparkContext.broadcast(rules)
-    val aggI = aggIdx
-    val gIdx = groupIdxs
-    val maxIter = maxIterations
-    val minSide = isMin
-    val longAgg = aggLong
-    val nCols = schema.length
-    val out = seedPart.mapPartitions(
-      Evaluator.monoPartitionFixpoint(bc, gIdx, aggI, nCols, longAgg,
-        minSide, maxIter))(org.apache.spark.sql.Encoders.row(schema))
+    val out = seedPart.mapPartitions(Evaluator.bestValueWave(bc,
+      Evaluator.BestValueShape(schema.length, aggIdx, aggLong, isMin),
+      maxIterations))(org.apache.spark.sql.Encoders.row(schema))
 
     // merge the per-partition maps: ONE min/max aggregation shuffle.
     // A null seed row aborts the wave from inside the task (the local
@@ -3404,11 +3296,12 @@ final class Evaluator(
     * frontiers (r06), extended to support aggregates. Updated
     * aggregate values become visible within the round (Gauss-Seidel);
     * the inflationary max-merge fixpoint is schedule-independent, so
-    * this converges to the relational loop's exact state. Caps:
-    * statics ≤1M rows (one collect per static per evaluator), support ≤2M
-    * entries — a mid-loop overflow bails to the relational path (its
-    * work is redone there; driver memory stays bounded). Returns None
-    * on any ineligible shape or cap overflow. */
+    * this converges to the relational loop's exact state. Caps (the
+    * cap rule): statics ≤ `LocalStaticRows` (one collect per static per
+    * evaluator), seed and support ≤ E entries — a mid-loop overflow
+    * bails to the relational path (its work is redone there; driver
+    * memory stays bounded). Returns None on any ineligible shape or
+    * cap overflow. */
   private def driverSupportFixpoint(
       clique: Analysis#Clique,
       p: String,
@@ -3443,10 +3336,9 @@ final class Evaluator(
     // count()/sum() emit LongType; anything else (decimal sums) bails
     if (recSchema(aggIdx).dataType != LongType) return None
 
-    val staticRows = staticRowsUpTo(1L << 20)
     case class SupRule(envSize: Int, steps: IndexedSeq[MonoStep],
         heads: IndexedSeq[EnvExpr])
-    def parse(r: Rule): Option[SupRule] = {
+    def parse(r: Rule, staticRows: StaticRows): Option[SupRule] = {
       val sr = supportRule(r)
       val (steps, _, envType, lower) =
         lowerLinearBody(clique, sr, recSchema, staticRows, monoSlot = aggIdx)
@@ -3466,28 +3358,21 @@ final class Evaluator(
       }.toIndexedSeq
       Some(SupRule(envType.length, steps, heads))
     }
-    val rulesOpt = recRules.map(parse)
-    if (rulesOpt.exists(_.isEmpty)) return None
-    val rules = rulesOpt.flatten
-
-    // same two-ceiling discipline as driverMonotonicFixpoint: the
-    // economic autoentries bail fires well before the memory backstop
-    // (the single-threaded driver loop loses to the distributed merge
-    // at large support sizes — measured on the monotonic twin at sf1.0).
-    // The seed collect is capped at the effective ceiling too, so a
-    // seed past it bails BEFORE shipping rows to the driver (the
-    // monotonic twin's cap.min discipline) instead of collecting a
-    // million rows only to throw them away on the overCap bail.
-    val supportCap =
-      conf.supportLocalMaxEntries.min(conf.supportLocalAutoEntries)
+    def lowerRules(staticRows: StaticRows): Option[Seq[SupRule]] =
+      Some(recRules.map(r => parse(r, staticRows).getOrElse(return None)))
+    // the shape is screened against empty statics (no job), then the
+    // seed is collected under the cap rule's E — a seed past it bails
+    // before any static row reaches the driver — and only then the
+    // statics
+    if (lowerRules(noStatics).isEmpty) return None
     supportLocalRuns += 1 // engaged (a collect bail still counts)
-    val seedRows =
-      collectCapped(supSeed, supportCap.min(1L << 24).toInt)
-        .getOrElse(return None)
+    val seedRows = collectLocalSeed(supSeed).getOrElse(return None)
     // the relational merge's count/sum/max skip null support values;
     // the local compare cannot — bail on any null (user-registered
     // EDBs only: Datalog-source tuples are non-null)
     if (seedRows.exists(_.anyNull)) return None
+    val rules = lowerRules(localStatics).getOrElse(return None)
+    val cap = localEntryCap
     val support =
       mutable.HashMap[IndexedSeq[Any], java.util.HashMap[Any, Any]]()
     val agg = mutable.HashMap[IndexedSeq[Any], Long]()
@@ -3502,7 +3387,7 @@ final class Evaluator(
         m.put(k, v); entries += 1
         // checked on EVERY insert: a single hub-heavy round must not
         // outgrow driver memory before a round-boundary check
-        if (entries > supportCap) overCap = true
+        if (entries > cap) overCap = true
         agg(g) = Math.addExact(agg.getOrElse(g, 0L),
           if (isCount) 1L else lv(v))
         dirty += g
@@ -3979,9 +3864,17 @@ final class Evaluator(
   }
 }
 
-// Serializable: task closures produced by monoPartitionFixpoint capture
-// the module (its eval helpers run on executors)
+// Serializable: task closures produced by setWave and bestValueWave
+// capture the module (its kernels run on executors)
 object Evaluator extends Serializable {
+  /** Row cap of every static relation the in-JVM fixpoint paths collect
+    * (see the cap rule in the class). */
+  private[datalog] final val LocalStaticRows = 1L << 20
+
+  /** Clamp on any driver collect's row limit, so no conf pushes a
+    * limit() past Int range. */
+  private[datalog] final val MaxCollectRows = 1L << 24
+
   /** True when the plan's leaves are all materialized carriers
     * (checkpointed RDD scans / LocalRelations) — i.e. re-evaluating the
     * DataFrame replays stored blocks and can never re-run fixpoint
@@ -4038,7 +3931,7 @@ object Evaluator extends Serializable {
     }
 
   /** Marker message for a null seed row detected inside a
-    * monoPartitionFixpoint task — the driver scans failure cause
+    * bestValueWave task — the driver scans failure cause
     * chains for it and falls back to the looped paths (which handle
     * nulls via min/max's null-ignoring semantics). A message token
     * rather than an exception class so Spark's task-failure wrapping/
@@ -4160,8 +4053,8 @@ object Evaluator extends Serializable {
 
   /** Run one rule's lowered steps over `env` (rec slots pre-bound),
     * calling `emit` once per complete binding — the single step walker
-    * shared by the driver monotonic, driver support, and task-wave
-    * paths, so probe/assign/filter semantics cannot diverge. */
+    * shared by the set and best-value kernels and the driver support
+    * loop, so probe/assign/filter semantics cannot diverge. */
   private[datalog] def runMonoSteps(
       steps: IndexedSeq[MonoStep], env: Array[Any], emit: () => Unit): Unit = {
     def go(j: Int): Unit =
@@ -4182,136 +4075,211 @@ object Evaluator extends Serializable {
     go(0)
   }
 
-  /** The per-partition set fixpoint of the localiterate wave: rounds
-    * of the lowered rules over this partition's frontier until no rule
-    * derives a new row. A static factory on the companion so the task
-    * closure captures only the broadcast handle. */
-  private[datalog] def setPartitionFixpoint(
-      bc: org.apache.spark.broadcast.Broadcast[IndexedSeq[MutualRule]])
-      : Iterator[org.apache.spark.sql.Row] => Iterator[org.apache.spark.sql.Row] =
-    (it: Iterator[org.apache.spark.sql.Row]) => {
-      val rules = bc.value
-      val all = new java.util.HashSet[IndexedSeq[Any]]()
-      var frontier = mutable.ArrayBuffer[IndexedSeq[Any]]()
-      it.foreach { row =>
-        val v = row.toSeq.toIndexedSeq
-        if (all.add(v)) frontier += v
+  /** The set kernel of the semi-naive in-JVM paths, run on the driver
+    * (`driverMutualFixpoint`: mutual cliques and the single-predicate
+    * handoff) and in each task of the localiterate wave (`setWave`).
+    * One fact set per predicate; each Jacobi round fires the rules
+    * whose recursive atom reads a predicate from that predicate's new
+    * facts of the previous round. `seeds` are (predicate, rows).
+    * None when the facts of all predicates together pass `cap`;
+    * `onRound(round, pred, newRows, roundStartNanos)` is called once
+    * per predicate that gained facts in a round. */
+  private[datalog] def setFixpoint(
+      rules: IndexedSeq[MutualRule],
+      seeds: Seq[(String, Iterator[org.apache.spark.sql.Row])],
+      cap: Long,
+      maxIterations: Int,
+      onRound: (Int, String, Int, Long) => Unit)
+      : Option[collection.Map[String, java.util.HashSet[IndexedSeq[Any]]]] = {
+    val facts = mutable.Map[String, java.util.HashSet[IndexedSeq[Any]]]()
+    def factsOf(q: String) =
+      facts.getOrElseUpdate(q, new java.util.HashSet[IndexedSeq[Any]]())
+    var frontier = mutable.Map[String, mutable.ArrayBuffer[IndexedSeq[Any]]]()
+    var total = 0L
+    for ((q, rows) <- seeds) {
+      val set = factsOf(q)
+      val buf = mutable.ArrayBuffer[IndexedSeq[Any]]()
+      rows.foreach { r =>
+        val v = r.toSeq.toIndexedSeq
+        if (set.add(v)) { buf += v; total += 1 }
       }
-      while (frontier.nonEmpty) {
-        val next = mutable.ArrayBuffer[IndexedSeq[Any]]()
+      if (buf.nonEmpty) frontier(q) = buf
+    }
+    if (total > cap) return None
+    val byRec = rules.groupBy(_.recPred)
+    var overCap = false
+    var rounds = 0
+    while (frontier.nonEmpty && !overCap) {
+      rounds += 1
+      if (rounds > maxIterations)
+        throw new IllegalStateException(
+          s"fixpoint exceeded $maxIterations iterations")
+      val t0 = System.nanoTime()
+      val next = mutable.Map[String, mutable.ArrayBuffer[IndexedSeq[Any]]]()
+      for ((q, rows) <- frontier; rule <- byRec.getOrElse(q, Nil)) {
+        val headFacts = factsOf(rule.headPred)
         var i = 0
-        while (i < frontier.length) {
-          val row = frontier(i)
-          rules.foreach { mr =>
-            val env = new Array[Any](mr.envSize)
-            var k = 0
-            while (k < mr.recArity) { env(k) = row(k); k += 1 }
-            runMonoSteps(mr.steps, env, () => {
-              val derived: IndexedSeq[Any] = mr.head.map(env)
-              if (all.add(derived)) next += derived
-            })
-          }
+        while (i < rows.length && !overCap) {
+          val row = rows(i)
+          val env = new Array[Any](rule.envSize)
+          var k = 0
+          while (k < rule.recArity) { env(k) = row(k); k += 1 }
+          runMonoSteps(rule.steps, env, () => {
+            val d: IndexedSeq[Any] = rule.head.map(env)
+            if (headFacts.add(d)) {
+              next.getOrElseUpdate(rule.headPred,
+                mutable.ArrayBuffer[IndexedSeq[Any]]()) += d
+              total += 1
+              // checked on EVERY insert: a single hub-heavy round must
+              // not outgrow memory before a round-boundary check
+              if (total > cap) overCap = true
+            }
+          })
           i += 1
         }
-        frontier = next
       }
-      val iter = all.iterator()
-      new Iterator[org.apache.spark.sql.Row] {
-        def hasNext: Boolean = iter.hasNext
-        def next(): org.apache.spark.sql.Row =
-          org.apache.spark.sql.Row.fromSeq(iter.next())
+      next.foreach { case (q, buf) => onRound(rounds, q, buf.size, t0) }
+      frontier = next
+    }
+    if (overCap) None else Some(facts)
+  }
+
+  /** Task body of the localiterate set wave: the partition's rows seed
+    * the set kernel, uncapped. A static factory on the companion so the
+    * task closure captures only the broadcast handle and primitives —
+    * never the (non-serializable) Evaluator instance. */
+  private[datalog] def setWave(
+      bc: org.apache.spark.broadcast.Broadcast[IndexedSeq[MutualRule]],
+      p: String,
+      maxIterations: Int)
+      : Iterator[org.apache.spark.sql.Row] => Iterator[org.apache.spark.sql.Row] =
+    (it: Iterator[org.apache.spark.sql.Row]) => {
+      import scala.jdk.CollectionConverters._
+      setFixpoint(bc.value, Seq(p -> it), Long.MaxValue, maxIterations,
+          (_, _, _, _) => ())
+        .flatMap(_.get(p)).iterator
+        .flatMap(_.iterator.asScala.map(org.apache.spark.sql.Row.fromSeq))
+    }
+
+  /** Column layout of a best-value (mmin/mmax) state: `nCols` columns,
+    * the int or long aggregate at `aggIdx`, the others — in order — the
+    * group. */
+  private[datalog] final case class BestValueShape(
+      nCols: Int, aggIdx: Int, aggLong: Boolean, isMin: Boolean) {
+    private val groupIdxs = (0 until nCols).filterNot(_ == aggIdx)
+
+    def better(a: Any, b: Any): Boolean = {
+      val c =
+        if (aggLong) java.lang.Long.compare(
+          a.asInstanceOf[Long], b.asInstanceOf[Long])
+        else java.lang.Integer.compare(
+          a.asInstanceOf[Int], b.asInstanceOf[Int])
+      if (isMin) c < 0 else c > 0
+    }
+
+    /** Write the columns of group `g` at value `v` into `out(0 until nCols)`. */
+    def fill(g: IndexedSeq[Any], v: Any, out: Array[Any]): Unit = {
+      var gi = 0
+      var ci = 0
+      while (ci < nCols) {
+        if (ci == aggIdx) out(ci) = v
+        else { out(ci) = g(gi); gi += 1 }
+        ci += 1
       }
     }
 
-  /** The per-partition monotonic local fixpoint (localIterateMonotonic
-    * body). A static factory on the companion so the task closure
-    * captures only the broadcast handle and primitives — never the
-    * (non-serializable) Evaluator instance. */
-  private[datalog] def monoPartitionFixpoint(
+    def group(r: org.apache.spark.sql.Row): IndexedSeq[Any] = groupIdxs.map(r.get)
+
+    def row(g: IndexedSeq[Any], v: Any): org.apache.spark.sql.Row = {
+      val out = new Array[Any](nCols)
+      fill(g, v, out)
+      org.apache.spark.sql.Row.fromSeq(
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
+    }
+  }
+
+  /** The best-value kernel of the mmin/mmax in-JVM paths, run on the
+    * driver (`driverMonotonicFixpoint`) and in each task of the
+    * localiterate wave (`bestValueWave`): group → best value. Each round
+    * fires every rule from the groups improved in the previous round,
+    * at their value at fire time (an improvement within the round
+    * re-marks the group for the next one), so `onRound(round,
+    * stateSize, roundStartNanos)` counts the rounds `iterationStats`
+    * reports. None when the state passes `cap`. */
+  private[datalog] def bestValueFixpoint(
+      rules: IndexedSeq[MonoRule],
+      shape: BestValueShape,
+      seeds: Iterator[org.apache.spark.sql.Row],
+      cap: Long,
+      maxIterations: Int,
+      onRound: (Int, Int, Long) => Unit)
+      : Option[java.util.HashMap[IndexedSeq[Any], Any]] = {
+    val best = new java.util.HashMap[IndexedSeq[Any], Any]()
+    var dirty = mutable.LinkedHashSet[IndexedSeq[Any]]()
+    var overCap = false
+    def offer(g: IndexedSeq[Any], v: Any): Unit = {
+      val old = best.get(g)
+      if (old == null || shape.better(v, old)) {
+        best.put(g, v); dirty += g
+        // checked on EVERY insert: a single hub-heavy round must not
+        // outgrow memory before a round-boundary check
+        if (best.size > cap) overCap = true
+      }
+    }
+    seeds.foreach(r => offer(shape.group(r), r.get(shape.aggIdx)))
+
+    var frontier = dirty
+    var rounds = 0
+    while (frontier.nonEmpty && !overCap) {
+      rounds += 1
+      if (rounds > maxIterations)
+        throw new IllegalStateException(
+          s"aggregate fixpoint exceeded $maxIterations iterations")
+      dirty = mutable.LinkedHashSet[IndexedSeq[Any]]()
+      val t0 = System.nanoTime()
+      val it = frontier.iterator
+      while (it.hasNext && !overCap) {
+        val g = it.next()
+        val v = best.get(g)
+        rules.foreach { mr =>
+          val env = new Array[Any](mr.envSize)
+          shape.fill(g, v, env)
+          runMonoSteps(mr.steps, env,
+            () => offer(mr.group.map(env), env(mr.aggSlot)))
+        }
+      }
+      onRound(rounds, best.size, t0)
+      frontier = dirty
+    }
+    if (overCap) None else Some(best)
+  }
+
+  /** Task body of the localiterate monotonic wave: the partition's rows
+    * seed the best-value kernel, uncapped. A static factory on the
+    * companion so the task closure captures only the broadcast handle
+    * and the shape — never the (non-serializable) Evaluator instance. */
+  private[datalog] def bestValueWave(
       bc: org.apache.spark.broadcast.Broadcast[IndexedSeq[MonoRule]],
-      gIdx: IndexedSeq[Int],
-      aggI: Int,
-      nCols: Int,
-      longAgg: Boolean,
-      minSide: Boolean,
-      maxIter: Int)
+      shape: BestValueShape,
+      maxIterations: Int)
       : Iterator[org.apache.spark.sql.Row] => Iterator[org.apache.spark.sql.Row] =
     (it: Iterator[org.apache.spark.sql.Row]) => {
-      val rs = bc.value
-      def better(a: Any, b: Any): Boolean = {
-        val c =
-          if (longAgg) java.lang.Long.compare(
-            a.asInstanceOf[Long], b.asInstanceOf[Long])
-          else java.lang.Integer.compare(
-            a.asInstanceOf[Int], b.asInstanceOf[Int])
-        if (minSide) c < 0 else c > 0
-      }
-      val best = new java.util.HashMap[IndexedSeq[Any], Any]()
-      def emitRow(g: IndexedSeq[Any], v: Any): IndexedSeq[Any] = {
-        val arr = new Array[Any](nCols)
-        var gi = 0
-        var ci = 0
-        while (ci < nCols) {
-          if (ci == aggI) arr(ci) = v
-          else { arr(ci) = g(gi); gi += 1 }
-          ci += 1
-        }
-        scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)
-      }
-      var frontier = mutable.ArrayBuffer[IndexedSeq[Any]]()
-      def offer(row: IndexedSeq[Any],
-          push: mutable.ArrayBuffer[IndexedSeq[Any]]): Unit = {
-        val g: IndexedSeq[Any] = gIdx.map(row)
-        val v = row(aggI)
-        val old = best.get(g)
-        if (old == null || better(v, old)) { best.put(g, v); push += row }
-      }
-      // null-free contract (mirrors the driver paths' seedRows.anyNull
-      // bail at lines ~999/~2268): a null aggregate would unbox to 0
+      import scala.jdk.CollectionConverters._
+      // null-free contract (the driver paths bail on a null seed row
+      // before they run the kernel): a null aggregate would unbox to 0
       // in better() — silently diverging from the looped reAgg's
-      // null-ignoring min/max — and a stored null best value re-pushes
-      // its row every round (best.get(g) == null means "absent").
-      // Statics are already guaranteed null-free (staticRowsUpTo bails
-      // the lowering), and the int/long arithmetic steps preserve
-      // non-nullness, so checking the incoming seed rows suffices. The
-      // marker aborts the wave; the driver catches it and falls back
-      // to the looped paths (see localIterateMonotonic).
-      it.foreach { r =>
+      // null-ignoring min/max — and a stored null best value reads as
+      // an absent group. Statics are null-free (the static collect
+      // rejects a null row) and the int/long steps preserve
+      // non-nullness, so checking the seed rows suffices. The marker
+      // aborts the wave; the driver catches it and falls back to the
+      // looped paths (see localIterateMonotonic).
+      val seeds = it.map { r =>
         if (r.anyNull) throw new IllegalStateException(nullSeedMarker)
-        offer(r.toSeq.toIndexedSeq, frontier)
+        r
       }
-      var rounds = 0
-      while (frontier.nonEmpty) {
-        rounds += 1
-        if (rounds > maxIter)
-          throw new IllegalStateException(
-            s"aggregate fixpoint exceeded $maxIter iterations (localiterate)")
-        val next = mutable.ArrayBuffer[IndexedSeq[Any]]()
-        var i = 0
-        while (i < frontier.length) {
-          val row = frontier(i)
-          // a queued value superseded by a later local improvement is
-          // dominated — skip it
-          if (best.get(gIdx.map(row): IndexedSeq[Any]) == row(aggI)) {
-            rs.foreach { mr =>
-              val env = new Array[Any](mr.envSize)
-              var k = 0
-              while (k < row.length) { env(k) = row(k); k += 1 }
-              runMonoSteps(mr.steps, env,
-                () => offer(emitRow(mr.group.map(env), env(mr.aggSlot)), next))
-            }
-          }
-          i += 1
-        }
-        frontier = next
-      }
-      val eit = best.entrySet().iterator()
-      new Iterator[org.apache.spark.sql.Row] {
-        def hasNext: Boolean = eit.hasNext
-        def next(): org.apache.spark.sql.Row = {
-          val e = eit.next()
-          org.apache.spark.sql.Row.fromSeq(emitRow(e.getKey, e.getValue))
-        }
-      }
+      val best = bestValueFixpoint(bc.value, shape, seeds, Long.MaxValue,
+        maxIterations, (_, _, _) => ()).get
+      best.entrySet.iterator.asScala.map(e => shape.row(e.getKey, e.getValue))
     }
 }

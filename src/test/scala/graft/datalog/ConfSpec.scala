@@ -226,7 +226,13 @@ class ConfSpec extends AnyFunSuite {
         "spark.datalog.recursion.bloomprefilter" -> "true",
         "spark.datalog.recursion.bloomprefilter.minrows" -> "4",
         "spark.datalog.recursion.bloomprefilter.expecteditems" -> "1024",
-        "spark.datalog.recursion.bloomprefilter.fpp" -> "0.5")) {
+        "spark.datalog.recursion.bloomprefilter.fpp" -> "0.5",
+        // values no other suite sets: the note is printed once per JVM
+        "spark.datalog.recursion.monotoniclocal.maxentries" -> "17",
+        "spark.datalog.recursion.supportlocal.maxentries" -> "17",
+        "spark.datalog.recursion.supportlocal.autoentries" -> "17",
+        "spark.datalog.recursion.localiterate.maxstaticrows" -> "17",
+        "spark.datalog.recursion.localiterate.autoseedrows" -> "17")) {
       val captured = new java.io.ByteArrayOutputStream()
       val err = System.err
       System.setErr(new java.io.PrintStream(captured, true))
@@ -237,5 +243,12 @@ class ConfSpec extends AnyFunSuite {
       assert(notes.head.contains("retired"), notes.head)
       assert(rows == expected, s"$k=$v changed the answer")
     }
+  }
+
+  test("DatalogConf holds 23 knobs") {
+    // one field per conf key: a new knob needs the evidence ROADMAP
+    // direction 3 asks for (one economic cap rule, not more switches)
+    assert(DatalogConf().productArity == 23,
+      "DatalogConf grew or shrank; update ROADMAP direction 3's field count")
   }
 }

@@ -218,8 +218,8 @@ class LocalIterateSpec extends AnyFunSuite {
     assert(wave == looped && wave.nonEmpty)
     assert(waveJobs < loopedJobs,
       s"expected fewer jobs than the looped path ($waveJobs vs $loopedJobs)")
-    // +1 vs the r18 budget: the economic seed-ceiling probe
-    // (localiterate.autoseedrows, r19) is one partial-agg count job
+    // +1 vs the r18 budget: the wave seed-ceiling probe (4 ×
+    // monotoniclocal.autoentries) is one partial-agg count job
     assert(waveJobs <= 11, s"expected a single task wave, saw $waveJobs jobs")
   }
 
@@ -469,7 +469,6 @@ class LocalIterateSpec extends AnyFunSuite {
       "spark.datalog.recursion.mutuallocal" -> "false")
     val (rows, _, runs) = runMutual("meven(A).",
       // cap of 4 < the 25 total facts: engage, overflow mid-loop, bail
-      "spark.datalog.recursion.monotoniclocal.maxentries" -> "4",
       "spark.datalog.recursion.monotoniclocal.autoentries" -> "4")
     assert(runs == 1, "driver fixpoint should engage before the overflow")
     assert(rows == looped, "the looped fallback must produce the full answer")
@@ -655,12 +654,11 @@ class LocalIterateSpec extends AnyFunSuite {
       run("spark.datalog.recursion.monotoniclocal" -> "false")
     assert(loopedRuns == 0)
     assert(looped == (0 until 40).map(n => s"[$n,${n / 10 * 10}]").toSet)
-    // driver path: the seed is over autoentries; the task wave: over
-    // autoseedrows. Neither may gather a static row first.
+    // E = 8: the driver path's seed cap is 8, the task wave's 4E = 32.
+    // Neither may gather a static row first.
     for (confs <- Seq(
         Seq("spark.datalog.recursion.monotoniclocal.autoentries" -> "8"),
         Seq("spark.datalog.recursion.localiterate" -> "true",
-          "spark.datalog.recursion.localiterate.autoseedrows" -> "8",
           "spark.datalog.recursion.monotoniclocal.autoentries" -> "8"))) {
       val (rows, peak, runs) = run(confs: _*)
       assert(rows == looped, s"$confs")
@@ -687,11 +685,14 @@ class LocalIterateSpec extends AnyFunSuite {
     try {
       val (shared1, _) = query(ctx, 1000)
       val peak = ctx.staticCollectPeakRows
+      val indexes = ctx.staticIndexBuilds
       val (shared2, sharedJobs) = query(ctx, 5003)
       assert(shared1 == fresh1 && shared2 == fresh2)
       assert(fresh2 == (5004 until 5010).map(b => s"[5003,$b]").toSet)
       assert(ctx.mutualLocalRuns == 2, "both queries should run the set kernel")
       assert(peak == arcRows.size && ctx.staticCollectPeakRows == peak)
+      assert(indexes == 1 && ctx.staticIndexBuilds == indexes,
+        s"static indexes: $indexes after one query, ${ctx.staticIndexBuilds} after two")
       // a fresh context counts and collects arc: two jobs the shared
       // context's second query skips
       assert(sharedJobs <= freshJobs - 2,

@@ -192,35 +192,68 @@ class SupportAggSpec extends DatalogSuite {
     val prog =
       "cp(X, msum<(S, C)>) <- X=0, S= -1, C=1. " +
         "cp(Y, msum<(X, C)>) <- cp(X, C), arc(X, Y)."
-    def run(kvs: (String, String)*): (Set[String], Int) =
-      withConf(kvs: _*) {
+    def run(kvs: (String, String)*): (Set[String], Int, Seq[(String, Int, Long)]) =
+      withConf(kvs :+ ("spark.datalog.recursion.collectstats" -> "true"): _*) {
         val ctx = new DatalogContext(spark)
         ctx.loadProgram(db + prog)
         ctx.registerData("arc", Fixtures.graph1b)
         val r = ctx.queryStrings("cp(N, C).").toSet
         val runs = ctx.supportLocalRuns
+        val rounds = ctx.iterationStats.map(s => (s._1, s._2, s._3))
         ctx.close()
-        (r, runs)
+        (r, runs, rounds)
       }
-    val (relational, _) =
+    val (relational, _, _) =
       run("spark.datalog.recursion.supportlocal" -> "false")
-    // a 4-entry ceiling: the driver path engages, overflows mid-loop,
-    // and the relational loop must still produce the exact fixpoint
-    val (bailed, bailedRuns) = run(
+    val (driver, _, driverRounds) =
+      run("spark.datalog.recursion.supportlocal" -> "auto")
+    assert(driver == relational && driver.nonEmpty)
+    // a 4-entry cap (the one cap, monotoniclocal.autoentries): the
+    // driver path engages, overflows mid-loop, and the relational loop
+    // must still produce the exact fixpoint
+    val (bailed, bailedRuns, _) = run(
       "spark.datalog.recursion.supportlocal" -> "auto",
-      "spark.datalog.recursion.supportlocal.maxentries" -> "4")
+      "spark.datalog.recursion.monotoniclocal.autoentries" -> "4")
     assert(bailedRuns == 1, "driver path never engaged before the bail")
-    assert(bailed == relational && bailed.nonEmpty,
+    assert(bailed == relational,
       "overflow bail diverged from the relational loop")
-    // the ECONOMIC ceiling (autoentries) bails the same way below the
-    // memory cap — the monotonic twin's measured single-thread-vs-
-    // distributed crossover applied to support maps
-    val (eco, ecoRuns) = run(
+    // the retired support caps are no-ops: at 4 the driver path still
+    // runs every round it runs at defaults, and nothing after them
+    val (retired, retiredRuns, retiredRounds) = run(
       "spark.datalog.recursion.supportlocal" -> "auto",
+      "spark.datalog.recursion.supportlocal.maxentries" -> "4",
       "spark.datalog.recursion.supportlocal.autoentries" -> "4")
-    assert(ecoRuns == 1, "driver path never engaged before the economic bail")
-    assert(eco == relational,
-      "autoentries bail diverged from the relational loop")
+    assert(retiredRuns == 1 && retired == relational)
+    assert(retiredRounds == driverRounds && driverRounds.nonEmpty,
+      s"retired keys changed the driver rounds: $retiredRounds vs $driverRounds")
+  }
+
+  test("a support seed over the cap bails before any static is collected") {
+    // every arc seeds one support row: 11 seed rows, over a cap of 4
+    val prog =
+      "nb(X, mcount<S>) <- arc(S, X). " +
+        "nb(Y, mcount<X>) <- nb(X, _), arc(X, Y)."
+    def run(kvs: (String, String)*) = withConf(kvs: _*) {
+      val ctx = new DatalogContext(spark)
+      ctx.loadProgram(db + prog)
+      ctx.registerData("arc", Fixtures.graph1b)
+      val r = ctx.queryStrings("nb(N, C).").toSet
+      val peak = ctx.staticCollectPeakRows
+      val runs = ctx.supportLocalRuns
+      ctx.close()
+      (r, peak, runs)
+    }
+    val (relational, _, _) = run("spark.datalog.recursion.supportlocal" -> "false")
+    // under the default cap the shape runs driver-resident and collects arc
+    val (driver, driverPeak, driverRuns) =
+      run("spark.datalog.recursion.supportlocal" -> "auto")
+    assert(driverRuns == 1 && driverPeak == Fixtures.graph1b.size)
+    assert(driver == relational && driver.nonEmpty)
+    val (bailed, peak, _) = run(
+      "spark.datalog.recursion.supportlocal" -> "auto",
+      "spark.datalog.recursion.monotoniclocal.autoentries" -> "4")
+    assert(bailed == relational, "the seed-cap bail diverged from the relational loop")
+    assert(peak == 0, s"$peak static rows reached the driver before the seed bail")
   }
 
   test("support copart iterations shuffle only the delta-sized candidate agg") {
